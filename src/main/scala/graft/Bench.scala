@@ -127,21 +127,10 @@ object Bench {
     // truthful form of SPARK_DRIVER_MEM, which may be unset).
     // the conf value is only guaranteed numeric when set via the validated
     // env var — interpolating any other source unquoted could emit invalid
-    // JSON; parse to Int, else emit a FULLY escaped JSON string (backslash,
-    // quote, and all control chars < 0x20 — Verify's q() discipline; a tab
-    // or newline in a conf value must not invalidate the bench JSON)
+    // JSON; parse to Int, else emit it as an escaped JSON string
     val shufParts = {
       val raw = spark.conf.get("spark.sql.shuffle.partitions")
-      scala.util.Try(raw.trim.toInt).map(_.toString).getOrElse(
-        "\"" + raw.flatMap {
-          case '"'  => "\\\""
-          case '\\' => "\\\\"
-          case '\n' => "\\n"
-          case '\r' => "\\r"
-          case '\t' => "\\t"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        } + "\"")
+      scala.util.Try(raw.trim.toInt).map(_.toString).getOrElse(graft.util.Json.str(raw))
     }
     val harness =
       s""""harness":{"shuffle_partitions":$shufParts,""" +

@@ -14,18 +14,13 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if (args.headOption.contains("g2")) { profileG2(dir); return }
-    if (args.headOption.contains("g2b")) { profileG2Current(dir); return }
-    if (args.headOption.contains("g2floor")) { profileG2Floor(dir); return }
     if (args.headOption.contains("dispatch")) { profileDispatchStats(dir); return }
     if (args.headOption.contains("s7vol")) { profileS7Volume(dir); return }
-    if (args.headOption.contains("d10")) { profileD10(dir); return }
     if (args.headOption.contains("g1b")) { profileG1b(dir); return }
     if (args.headOption.contains("d4vol")) { profileD4Volumes(dir); return }
     if (args.headOption.contains("d4r")) { profileD4R(dir); return }
     if (args.headOption.contains("d4ab")) { profileD4AB(dir); return }
     if (args.headOption.contains("d4part")) { profileD4Part(dir); return }
-    if (args.headOption.contains("ppjoin")) { profilePpjoin(dir); return }
     if (args.headOption.contains("pqrecall")) { profilePqRecall(dir); return }
     if (args.headOption.contains("s9bdiag")) { profileS9bDiag(dir); return }
     if (args.headOption.contains("mawidth")) { profileMaWidth(dir); return }
@@ -197,14 +192,6 @@ object Profile {
     spark.stop()
   }
 
-  /** Stage-by-stage timing of g2_triangles at bench parallelism. */
-  /** d10 stage decomposition: shingles/bands build vs candidate join vs
-    * the pairsCommon verify — which term owns the 27 s at sf10? */
-  /** Candidate-volume effect of the d11b PPJoin positional filter: the
-    * distinct (a, b) candidate count the verify stage receives, with and
-    * without the WWW'08 positional bound, plus the raw prefix-index match
-    * rows the filter prunes before the distinct. Replicates
-    * containmentPairsPrefix's candidate build verbatim at τ = 0.6. */
   /** Recall of the PQ/IVFADC tiers vs exact brute force at a given Lloyd
     * iteration count — iters=0 IS the round-13 sampled-init codebook (same
     * md5 anchor set as the old fit), so the iters=0 vs iters=2 delta is
@@ -261,7 +248,7 @@ object Profile {
     val ncoarse = math.max(2, math.ceil(math.sqrt(nlist.toDouble)).toInt)
     val ak = graft.dedup.Dedup.md5Hash60(
       concat(lit("ivfanchor|"), col("vec_id").cast("string")))
-    val ranked = graft.util.Caches.scoped(emb
+    val ranked = graft.util.Caches.materialize(emb
       .select(col("vec_id").as("cell"), col("embedding").as("ce"), ak.as("ak"))
       .orderBy(col("ak"), col("cell")).limit(nlist)
       .withColumn("r", row_number().over(Window.orderBy(col("ak"), col("cell"))))
@@ -304,7 +291,7 @@ object Profile {
     val ncoarse = math.max(2, math.ceil(math.sqrt(nlist.toDouble)).toInt)
     val ak = graft.dedup.Dedup.md5Hash60(
       concat(lit("ivfanchor|"), col("vec_id").cast("string")))
-    val ranked = graft.util.Caches.scoped(emb
+    val ranked = graft.util.Caches.materialize(emb
       .select(col("vec_id").as("cell"), col("embedding").as("ce"), ak.as("ak"))
       .orderBy(col("ak"), col("cell")).limit(nlist)
       .withColumn("r", row_number().over(Window.orderBy(col("ak"), col("cell"))))
@@ -618,68 +605,6 @@ object Profile {
     spark.stop()
   }
 
-  def profilePpjoin(dir: String): Unit = {
-    val spark = GraftSession()
-    val tau = 0.6
-    val docs = Tables.documents(spark, dir)
-    docs.count() // warm
-    val sh = graft.util.Caches.scoped(
-      graft.text.TextAnalysis.shingleRows(docs))
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val freq = sh.groupBy("s").agg(count(lit(1)).as("df"))
-    val rarityOrder = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("df", "s")
-    val ranked = graft.util.Caches.material(sh.join(freq, "s")
-      .withColumn("rank", row_number().over(rarityOrder))
-      .join(sizes, "doc_id"))
-    val prefixes = ranked
-      .filter(col("rank") <= col("n") - ceil(lit(tau) * col("n")) + 1)
-      .select(col("doc_id").as("a_id"), col("s"), col("n").as("na"),
-        col("rank").as("pa"))
-    val index = ranked.select(col("doc_id").as("b_id"), col("s").as("s2"),
-      col("n").as("nb"), col("rank").as("pb"))
-    val matches = prefixes.join(index, col("s") === col("s2"))
-      .filter(col("a_id") =!= col("b_id"))
-    t("prefix-index match rows (pre-filter)")(matches)
-    t("distinct candidates WITHOUT positional filter")(
-      matches.select("a_id", "b_id").distinct())
-    val kept = matches.filter(
-      (lit(1L) + least(col("na") - col("pa"), col("nb") - col("pb")))
-        .cast("double") / col("na") >= lit(tau))
-    t("match rows kept by positional filter")(kept)
-    t("distinct candidates WITH positional filter")(
-      kept.select("a_id", "b_id").distinct())
-  }
-
-  def profileD10(dir: String): Unit = {
-    val spark = GraftSession()
-    import graft.dedup.Dedup
-    val docs = Tables.documents(spark, dir)
-    docs.count() // warm
-    var t0 = System.nanoTime()
-    def mark(name: String): Unit = {
-      val now = System.nanoTime()
-      println(f"[d10] ${(now - t0) / 1e9}%8.2fs  $name")
-      t0 = now
-    }
-    val sh = graft.util.Caches.scoped(graft.text.TextAnalysis.shingleRows(docs))
-    println(s"[d10] shingle rows: ${sh.count()}")
-    mark("shingles built+counted")
-    val bands = graft.util.Caches.scoped(Dedup.minHashBands(sh))
-    println(s"[d10] band rows: ${bands.count()}")
-    mark("bands built+counted")
-    val probe = bands.filter(col("doc_id") % 10 === 0).toDF("a_id", "band", "sig")
-    val index = bands.filter(col("doc_id") % 10 =!= 0).toDF("b_id", "band2", "sig2")
-    val cand = probe
-      .join(index, col("band") === col("band2") && col("sig") === col("sig2"))
-      .select("a_id", "b_id").distinct()
-    println(s"[d10] candidates: ${cand.count()}")
-    mark("candidate join+distinct")
-    val n = Dedup.incrementalNearDupPairs(docs, 0.5).count()
-    mark(s"full d10 from cache ($n pairs)")
-    spark.stop()
-  }
-
   /** s7 candidate-volume decomposition: is sf10→sf30 growth the pair
     * budget (algorithmic) or the verify/execution regime? */
   def profileS7Volume(dir: String): Unit = {
@@ -701,97 +626,6 @@ object Profile {
     val t2 = System.nanoTime()
     println(f"[s7vol] n=$n bits=$bits rawPairs=$rawPairs distinctCand=$cand " +
       f"joinCount=${(t1 - t0) / 1e9}%.1fs distinct=${(t2 - t1) / 1e9}%.1fs")
-    spark.stop()
-  }
-
-  /** Stage timing of the CURRENT g2 implementation (round-11): where do
-    * the seconds go at sf0.1 after the probe-skip change? */
-  def profileG2Current(dir: String): Unit = {
-    val spark = GraftSession()
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    li.count() // warm
-    for (it <- 1 to 3) {
-    graft.util.Caches.releaseAll()
-    var tPrev = System.nanoTime()
-    def mark(name: String): Unit = {
-      val now = System.nanoTime()
-      println(f"[$it] ${(now - tPrev) / 1e9}%8.2fs  $name")
-      tPrev = now
-    }
-    val baskets = li.groupBy("ok").agg(sort_array(collect_set("pk")).as("ps"))
-    val edges = baskets
-      .select(explode(expr(
-        "flatten(transform(ps, (x, i) -> " +
-          "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS u, y AS v))))"
-      )).as("e"))
-      .select(col("e.u").as("u"), col("e.v").as("v"))
-      .distinct()
-    val (e, mEdges) = graft.util.Caches.materialAdaptive(edges)
-    mark(s"materialAdaptive(edges) done, m=$mEdges")
-    val deg = e.select(explode(array(col("u"), col("v"))).as("x"))
-      .groupBy("x").agg(count(lit(1)).as("d"))
-    val key = (d: org.apache.spark.sql.Column, id: org.apache.spark.sql.Column) =>
-      d * lit(4294967296L) + id
-    val oriented = graft.util.Caches.materialKnown(e
-      .join(deg.select(col("x").as("u"), col("d").as("du")), "u")
-      .join(deg.select(col("x").as("v"), col("d").as("dv")), "v")
-      .select(
-        when(key(col("du"), col("u")) < key(col("dv"), col("v")),
-          struct(col("u").as("s"), col("v").as("t"),
-            key(col("dv"), col("v")).as("tk")))
-        .otherwise(struct(col("v").as("s"), col("u").as("t"),
-          key(col("du"), col("u")).as("tk"))).as("e"))
-      .select(col("e.s").as("s"), col("e.t").as("t"), col("e.tk").as("tk")), mEdges)
-    mark("oriented declared (lazy)")
-    val pack = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-      a * lit(4294967296L) + b
-    val packedE = oriented.select(pack(col("s"), col("t")).as("ck"))
-    val bloom = packedE.stat.bloomFilter("ck",
-      math.max(1L, math.min(mEdges, 100000000L)), 0.01)
-    mark("bloom built (materializes oriented)")
-    val bloomBc = spark.sparkContext.broadcast(bloom)
-    val mightClose = (ck: org.apache.spark.sql.Column) =>
-      graft.functions.GraftFunctions.bloom_probe(ck, bloomBc)
-    val defaultParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val closeParts = math.max(defaultParts, (mEdges / 300000L).toInt + 1)
-    def close(wedges: org.apache.spark.sql.DataFrame): Long = {
-      val closed = wedges.filter(mightClose(col("ck")))
-        .repartition(closeParts, col("ck"))
-        .join(packedE.repartition(closeParts, col("ck")).hint("SHUFFLE_HASH"), "ck")
-      closed
-        .select(explode(array(col("s"),
-          expr("ck div 4294967296"), pmod(col("ck"), lit(4294967296L)))).as("part"))
-        .groupBy("part").agg(count(lit(1)).as("n_triangles"))
-        .count()
-    }
-    // A: self-join wedges (round-10 shape)
-    val w1 = oriented.select(col("s"), col("t").as("t1"), col("tk").as("k1"))
-      .repartition(closeParts, col("s"))
-    val w2 = oriented.select(col("s"), col("t").as("t2"), col("tk").as("k2"))
-      .repartition(closeParts, col("s"))
-    val wedgesA = w1.join(w2, Seq("s")).filter(col("k1") < col("k2"))
-      .select(col("s"), pack(col("t1"), col("t2")).as("ck"))
-    val nA = close(wedgesA)
-    mark(s"A self-join wedges ($nA parts)")
-    // B: adjacency in-array wedges (round-11 shape)
-    val adjO = oriented
-      .repartition(closeParts, col("s"))
-      .groupBy("s")
-      .agg(sort_array(collect_list(struct(col("tk"), col("t")))).as("ns"))
-    val wedgesB = adjO
-      .select(col("s"), explode(expr(
-        "flatten(transform(ns, (x, i) -> " +
-          "transform(slice(ns, i + 2, size(ns)), y -> struct(x.t AS t1, y.t AS t2))))"
-      )).as("w"))
-      .select(col("s"), pack(col("w.t1"), col("w.t2")).as("ck"))
-    val nB = close(wedgesB)
-    mark(s"B adjacency wedges ($nB parts)")
-    val nA2 = close(wedgesA)
-    mark(s"A again ($nA2 parts)")
-    val nB2 = close(wedgesB)
-    mark(s"B again ($nB2 parts)")
-    }
     spark.stop()
   }
 
@@ -825,128 +659,6 @@ object Profile {
       val s3route = graft.similarity.Ivf.chooseAnchorIvf(n)
       mark(s"d9c/s3d stat n=$n -> d9c route $d9route, s3d route $s3route")
     }
-    spark.stop()
-  }
-
-  /** Round-12 g2 floor decision (VERDICT #8): serialized action-boundary
-    * latencies of the CURRENT implementation at sf0.1, plus a bloom-less
-    * close variant — is any stage cuttable, or is the remainder a floor?
-    * Stages: (1) baskets→edges→materialAdaptive count; (2) bloom build
-    * (the pass that also materializes `oriented`); (3) adjacency + wedge
-    * generators + bloom probe + close join + final rollup, one action;
-    * (4) the same close WITHOUT the bloom probe (is the prune still a win
-    * at this scale, i.e. is cutting it a pessimization?). */
-  def profileG2Floor(dir: String): Unit = {
-    val spark = GraftSession()
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    li.count() // warm
-    for (it <- 1 to 3) {
-      graft.util.Caches.releaseAll()
-      var tPrev = System.nanoTime()
-      def mark(name: String): Unit = {
-        val now = System.nanoTime()
-        println(f"[g2floor $it] ${(now - tPrev) / 1e9}%8.2fs  $name")
-        tPrev = now
-      }
-      val baskets = li.groupBy("ok").agg(sort_array(collect_set("pk")).as("ps"))
-      val edges = baskets
-        .select(explode(expr(
-          "flatten(transform(ps, (x, i) -> " +
-            "transform(slice(ps, i + 2, size(ps)), y -> struct(x AS u, y AS v))))"
-        )).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-        .distinct()
-      val (e, mEdges) = graft.util.Caches.materialAdaptive(edges)
-      mark(s"1 edges+materialAdaptive (m=$mEdges)")
-      val deg = e.select(explode(array(col("u"), col("v"))).as("x"))
-        .groupBy("x").agg(count(lit(1)).as("d"))
-      val key = (d: org.apache.spark.sql.Column, id: org.apache.spark.sql.Column) =>
-        d * lit(4294967296L) + id
-      val oriented = graft.util.Caches.materialKnown(e
-        .join(deg.select(col("x").as("u"), col("d").as("du")), "u")
-        .join(deg.select(col("x").as("v"), col("d").as("dv")), "v")
-        .select(
-          when(key(col("du"), col("u")) < key(col("dv"), col("v")),
-            struct(col("u").as("s"), col("v").as("t"),
-              key(col("dv"), col("v")).as("tk")))
-          .otherwise(struct(col("v").as("s"), col("u").as("t"),
-            key(col("du"), col("u")).as("tk"))).as("e"))
-        .select(col("e.s").as("s"), col("e.t").as("t"), col("e.tk").as("tk")), mEdges)
-      val pack = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-        a * lit(4294967296L) + b
-      val packedE = oriented.select(pack(col("s"), col("t")).as("ck"))
-      val bloom = packedE.stat.bloomFilter("ck",
-        math.max(1L, math.min(mEdges, 100000000L)), 0.01)
-      mark("2 bloom build (materializes oriented)")
-      val bloomBc = spark.sparkContext.broadcast(bloom)
-      val defaultParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val closeParts = math.max(defaultParts, (mEdges / 300000L).toInt + 1)
-      val adjO = oriented
-        .repartition(closeParts, col("s"))
-        .groupBy("s")
-        .agg(sort_array(collect_list(struct(col("tk"), col("t")))).as("ns"))
-      val wedges = adjO
-        .select(col("s"), col("ns"), posexplode(col("ns")))
-        .select(col("s"), col("col.t").as("t1"),
-          explode(expr("transform(slice(ns, pos + 2, size(ns)), y -> y.t)")).as("t2"))
-        .select(col("s"), pack(col("t1"), col("t2")).as("ck"))
-      def close(pruned: org.apache.spark.sql.DataFrame): Long =
-        pruned
-          .repartition(closeParts, col("ck"))
-          .join(packedE.repartition(closeParts, col("ck")).hint("SHUFFLE_HASH"), "ck")
-          .select(explode(array(col("s"),
-            expr("ck div 4294967296"), pmod(col("ck"), lit(4294967296L)))).as("part"))
-          .groupBy("part").agg(count(lit(1)).as("n_triangles"))
-          .count()
-      val n1 = close(wedges.filter(
-        graft.functions.GraftFunctions.bloom_probe(col("ck"), bloomBc)))
-      mark(s"3 wedges+bloomprobe+close+rollup ($n1 parts)")
-      val n2 = close(wedges)
-      mark(s"4 same close WITHOUT bloom ($n2 parts)")
-    }
-    spark.stop()
-  }
-
-  def profileG2(dir: String): Unit = {
-    val spark = GraftSession()
-    val li = Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    li.count() // warm
-    val edgesPlan = li.as("a").join(li.as("b"),
-        col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-      .select(col("a.pk").as("u"), col("b.pk").as("v"))
-      .distinct()
-    t("edges derivation")(edgesPlan)
-    val edges = edgesPlan.localCheckpoint()
-    val deg = edges.select(explode(array(col("u"), col("v"))).as("x"))
-      .groupBy("x").agg(count(lit(1)).as("d"))
-    t("deg")(deg)
-    val key = (d: org.apache.spark.sql.Column, id: org.apache.spark.sql.Column) =>
-      d * lit(4294967296L) + id
-    val orientedPlan = edges
-      .join(deg.select(col("x").as("u"), col("d").as("du")), "u")
-      .join(deg.select(col("x").as("v"), col("d").as("dv")), "v")
-      .select(
-        when(key(col("du"), col("u")) < key(col("dv"), col("v")),
-          struct(col("u").as("s"), col("v").as("t"),
-            key(col("dv"), col("v")).as("tk")))
-        .otherwise(struct(col("v").as("s"), col("u").as("t"),
-          key(col("du"), col("u")).as("tk"))).as("e"))
-      .select(col("e.s").as("s"), col("e.t").as("t"), col("e.tk").as("tk"))
-    t("oriented build")(orientedPlan)
-    val oriented = orientedPlan.localCheckpoint()
-    val w1 = oriented.select(col("s"), col("t").as("t1"), col("tk").as("k1"))
-    val w2 = oriented.select(col("s"), col("t").as("t2"), col("tk").as("k2"))
-    val wedges = w1.join(w2, Seq("s")).filter(col("k1") < col("k2"))
-    t("wedges (generate only)")(wedges)
-    val closed = wedges.join(
-      oriented.select(col("s").as("t1"), col("t").as("t2")), Seq("t1", "t2"))
-    t("closing join")(closed)
-    t("per-part counts")(closed
-      .select(explode(array(col("s"), col("t1"), col("t2"))).as("part"))
-      .groupBy("part").agg(count(lit(1)).as("n_triangles")))
-    t("g2 end-to-end (current impl)")(graft.operators.Graph.g2Triangles(spark, dir))
     spark.stop()
   }
 }

@@ -52,7 +52,7 @@ object Dedup {
     // Sigma-df^2 self-join stage fused with the shingle explode -- exactly
     // the shape the scan-parallelism guard pays for (measured -1.23 s at
     // sf0.1; no-op at real scale where the scan is already parallel)
-    val sh = graft.util.Caches.scoped(shingleRows(graft.util.Par.widen(docs)))
+    val sh = graft.util.Caches.materialize(shingleRows(graft.util.Par.widen(docs)))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val common = sh.toDF("a_id", "s")
       .join(sh.toDF("b_id", "s2"), col("s") === col("s2") && col("a_id") < col("b_id"))
@@ -75,16 +75,15 @@ object Dedup {
     * Σ df² land outside every prefix — then only candidates get the
     * full-set verify. */
   def ngramJaccardPairsPrefix(docs: DataFrame, threshold: Double): DataFrame = {
-    val sh = graft.util.Caches.scoped(shingleRows(docs))
+    val sh = graft.util.Caches.materialize(shingleRows(docs))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val freq = sh.groupBy("s").agg(count(lit(1)).as("df"))
     val rarityOrder = Window.partitionBy("doc_id").orderBy("df", "s")
-    // NOT materialized (round 16, measured): an eager materialAdaptive here
-    // cost more than the duplicated derivation it saved — and worse, it
-    // executes at query-CONSTRUCTION time, so consumers whose final action
-    // prunes this subtree entirely (d6's unique-key left join under the
-    // bench's count()) suddenly paid for a pipeline they never evaluate
-    // (d6 0.29 → 2.26 s, reverted). The self-join's two derivations stay.
+    // NOT materialized (round 16, measured): an eager cache-and-count here
+    // cost more than the duplicated derivation it saved, and ran at query
+    // construction even for consumers whose final action prunes this
+    // subtree (d6's unique-key left join under a count(): 0.29 → 2.26 s).
+    // The self-join's two derivations stay.
     val prefixes = sh.join(freq, "s")
       .withColumn("rank", row_number().over(rarityOrder))
       .join(sizes, "doc_id")
@@ -140,7 +139,7 @@ object Dedup {
   def containmentPairs(docs: DataFrame, tau: Double): DataFrame = {
     // widened input -- same single-dominant-stage rationale as
     // [[ngramJaccardPairs]] (measured -0.70 s at sf0.1)
-    val sh = graft.util.Caches.scoped(shingleRows(graft.util.Par.widen(docs)))
+    val sh = graft.util.Caches.materialize(shingleRows(graft.util.Par.widen(docs)))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val common = sh.toDF("a_id", "s")
       .join(sh.toDF("b_id", "s2"), col("s") === col("s2") && col("a_id") < col("b_id"))
@@ -170,23 +169,17 @@ object Dedup {
     * false negatives by construction — the oracle is d11's naive SQL, so
     * a hash match proves it (the d2b pattern). */
   def containmentPairsPrefix(docs: DataFrame, tau: Double): DataFrame = {
-    val sh = graft.util.Caches.scoped(shingleRows(docs))
+    val sh = graft.util.Caches.materialize(shingleRows(docs))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val freq = sh.groupBy("s").agg(count(lit(1)).as("df"))
     val rarityOrder = Window.partitionBy("doc_id").orderBy("df", "s")
     // every shingle's 1-based rank in ITS doc under the GLOBAL rarity
-    // order — built once, MATERIALIZED (parquet spill, not block-manager
-    // persist): the frame is corpus-scaled (all shingle rows + rank), and
-    // a block-manager cache of it squats the storage region 32 shuffle
-    // sorters need — the measured sf10 failure (UNABLE_TO_ACQUIRE_MEMORY
-    // on the first r13 campaign attempt, rescued only by the retry). The
-    // prefix side filters it, the index side reads it whole, and the
-    // shared order is what makes the PPJoin positional bound below valid.
-    // (Round-16 A/B: materialAdaptive — cache below 5M rows — measured
-    // NEUTRAL here, 4.04 s material vs 4.08/4.40 adaptive at sf0.1; the
-    // cache-population count pass costs what the parquet round trip costs
-    // on this frame, so the r13-measured form stays.)
-    val ranked = graft.util.Caches.material(sh.join(freq, "s")
+    // order — built once, MATERIALIZED: the prefix side filters it, the
+    // index side reads it whole, and the shared order is what makes the
+    // PPJoin positional bound below valid. The frame is corpus-scaled (all
+    // shingle rows + rank); at sf10 a cached copy squats the storage
+    // region the shuffle sorters need (UNABLE_TO_ACQUIRE_MEMORY, measured).
+    val ranked = graft.util.Caches.materialize(sh.join(freq, "s")
       .withColumn("rank", row_number().over(rarityOrder))
       .join(sizes, "doc_id"))
     val prefixes = ranked
@@ -355,7 +348,7 @@ object Dedup {
     * generation is an equi-join on (band, band_sig); only collisions are
     * verified. */
   def minHashLshPairs(docs: DataFrame, threshold: Double): DataFrame = {
-    val sh = graft.util.Caches.scoped(shingleRows(docs))
+    val sh = graft.util.Caches.materialize(shingleRows(docs))
     val bands = minHashBands(sh)
     val cand = bands.toDF("a_id", "band", "sig")
       .join(bands.toDF("b_id", "band2", "sig2"),
@@ -440,7 +433,7 @@ object Dedup {
     * the wider keys saved; the first-match predicate replaces that whole
     * exchange with a few codegen'd mask tests per joined row. */
   def simHashPairsR(docs: DataFrame, maxHamming: Int, rSel: Int): DataFrame = {
-    val codes = graft.util.Caches.scoped(simHash(docs))
+    val codes = graft.util.Caches.materialize(simHash(docs))
     // the count materializes the shared cache AND gates the measurement:
     // below ~20k docs even the worst-case r=1 join is a few 10⁷ rows and
     // the model's own aggregations exceed any possible win
@@ -682,7 +675,7 @@ object Dedup {
     * O(|shingles|) — runnable over the full corpus at any scale as a
     * filtering signal before the pairwise tiers. */
   def dupNgramCoverage(docs: DataFrame): DataFrame = {
-    val sh = graft.util.Caches.scoped(shingleRows(docs))
+    val sh = graft.util.Caches.materialize(shingleRows(docs))
     val dfreq = sh.groupBy("s").agg(count(lit(1)).as("df"))
     sh.join(dfreq, "s")
       .groupBy("doc_id")
@@ -705,8 +698,8 @@ object Dedup {
     * only change streaming ingest needs (foreachBatch + the k2 upsert sink
     * appends accepted docs' bands to the index). */
   def incrementalNearDupPairs(docs: DataFrame, threshold: Double): DataFrame = {
-    val sh = graft.util.Caches.scoped(shingleRows(docs))
-    val bands = graft.util.Caches.scoped(minHashBands(sh))
+    val sh = graft.util.Caches.materialize(shingleRows(docs))
+    val bands = graft.util.Caches.materialize(minHashBands(sh))
     val probe = bands.filter(col("doc_id") % 10 === 0).toDF("a_id", "band", "sig")
     val index = bands.filter(col("doc_id") % 10 =!= 0).toDF("b_id", "band2", "sig2")
     val cand = probe

@@ -35,7 +35,7 @@ object EntityResolution {
     * its cluster id (= min name in the component), cluster size in
     * distinct names, the variant's part count, and the elected canonical. */
   def er1EntityClusters(spark: SparkSession, dir: String): DataFrame = {
-    val names = graft.util.Caches.scoped(
+    val names = graft.util.Caches.materialize(
       Tables.part(spark, dir)
         .groupBy(col("p_name").as("name"))
         .agg(countDistinct("p_partkey").as("n_parts")))

@@ -91,7 +91,7 @@ object SemDedup {
     // members is corpus-sized and feeds both sides of the cell self-join —
     // persist once; every join here is a shuffle equi-join (no hints:
     // embedding/norm/quality frames are all corpus-sized)
-    val members = graft.util.Caches.scoped(assign
+    val members = graft.util.Caches.materialize(assign
       .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
       .join(norms, "vec_id")
       .join(docs.select(col("doc_id").as("vec_id"), col("n_chars").as("q")),
@@ -189,7 +189,7 @@ object SemDedup {
     val tAnchor = math.floor(scale * nlist).toLong
     val tCoarse = math.floor(scale * ncoarse).toLong
     val ak = Dedup.md5Hash60(concat(lit("semdedup2|"), col("vec_id").cast("string")))
-    val anchors = graft.util.Caches.scoped(emb
+    val anchors = graft.util.Caches.materialize(emb
       .select(col("vec_id").as("cell"), col("embedding").as("ce"), ak.as("akk"))
       .filter(col("akk") < tAnchor))
     val coarse = anchors.filter(col("akk") < tCoarse)

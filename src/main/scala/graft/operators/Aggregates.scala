@@ -280,7 +280,7 @@ object Aggregates {
     * day. The sketch alternative at extreme scale is an HLL union per
     * window; this is the exact path and stays oracle-checkable. */
   def a19ActiveUsers(spark: SparkSession, dir: String): DataFrame = {
-    val ud = graft.util.Caches.scoped(
+    val ud = graft.util.Caches.materialize(
       Tables.events(spark, dir)
         .select(col("user_id"), to_date(col("ts")).as("day")).distinct())
     val dau = ud.groupBy("day").agg(count(lit(1)).as("dau"))

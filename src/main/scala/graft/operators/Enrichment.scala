@@ -107,19 +107,13 @@ object Enrichment {
     }
 
     val (d1, e) = dimFor("e")
-    // MATERIALIZED (round 16): the exact-phase join feeds FIVE consumers —
-    // the hit projection, and through the miss set the fuzzy probe build,
-    // the long-fact candidate join, the short-key theta join, and the
-    // final left join that re-attaches the fuzzy verdicts. DataFrame DAGs
-    // share no common subplans, so unmaterialized each consumer re-ran the
-    // whole facts scan + vendor derivation + exact join (measured at
-    // sf0.1: j02b's 5 s was dominated by repeated ~0.3-0.5 s single-task
-    // derivations and their broadcast builds). One materialization pass is
-    // strictly cheaper at every scale: 1 exact-join pass + K columnar
-    // reads instead of K full passes (guide §1.2: don't compute things you
-    // throw away). materialAdaptive keeps the 100 TB posture — cache for
-    // contract-size frames, parquet spill when fact-scaled.
-    val (exact, _) = graft.util.Caches.materialAdaptive(
+    // MATERIALIZED: the exact-phase join feeds FIVE consumers — the hit
+    // projection, and through the miss set the fuzzy probe build, the
+    // long-fact candidate join, the short-key theta join, and the final
+    // left join that re-attaches the fuzzy verdicts. Unshared, each one
+    // re-ran the facts scan + vendor derivation + exact join (measured at
+    // sf0.1: j02b's 5 s was dominated by those repeated derivations).
+    val exact = graft.util.Caches.materialize(
       facts.join(d1, facts(factKey) === e(dimKey), "left"))
     val hits = exact.filter(e(dimId).isNotNull)
       .select(facts.columns.map(col) ++ payload.map(p => e(p).as(p)) :+
@@ -161,14 +155,12 @@ object Enrichment {
     // this path: at contract scale AQE broadcasts them at runtime, at the
     // measured sf10 scale (22.5M gram rows off a 1.5M-row dim) the joins
     // stay shuffled instead of forcing a 1.4 GB broadcast
-    // MATERIALIZED (round 16): grams feeds both the document-frequency
-    // aggregate and the candidate join — unmaterialized, the dim scan, the
-    // key-dedup window and the q-gram explode ran twice (and the df
-    // aggregate's broadcast build re-ran them a third time when AQE
-    // broadcast it). materialAdaptive: cache at contract scale, parquet
-    // at the measured sf10 scale (22.5M gram rows), where a block-manager
-    // cache of the index was exactly the round-14 de-hinting concern.
-    val (grams, _) = graft.util.Caches.materialAdaptive(
+    // MATERIALIZED: grams feeds both the document-frequency aggregate and
+    // the candidate join — unshared, the dim scan, the key-dedup window and
+    // the q-gram explode ran twice (three times when AQE broadcast the df
+    // aggregate). At sf10 the index is 22.5M rows, the scale where a cached
+    // copy would crowd the join's sorters.
+    val grams = graft.util.Caches.materialize(
       d.withColumn("__g", explode(qgrams(col("__dk")))))
     val gramDf = grams.groupBy("__g").agg(count(lit(1)).as("__df"))
 

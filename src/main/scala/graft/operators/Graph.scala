@@ -350,31 +350,23 @@ object Graph {
 
   def triangleCounts(edges: DataFrame, bloomCutover: Long): DataFrame = {
     // edges: undirected distinct pairs (u, v), u < v, both Long.
-    // Materialized SIZE-CONDITIONALLY (Caches.materialAdaptive): the degree
-    // count and the orientation join both read it (an unmaterialized edge
-    // list re-runs its possibly-expensive derivation per consumer). Small
-    // corpora keep the block-manager cache (the unconditional parquet
-    // round-trip cost g2 4.1→7.1 s at sf0.1); past ~5M rows the frame goes
-    // to parquet so a cached copy can't squat the storage half of the
-    // unified pool that the wedge stage's 32 concurrent sorters need —
-    // the measured sf10 failure mode (see Caches.material).
-    // The probe's count is reused below: orientation is a 1:1 projection
-    // of e (two inner joins on its OWN degree frame change no cardinality),
-    // so m is known before the oriented frame exists — materialKnown skips
-    // the second persist+count pass (round-10 VERDICT #3: the two blocking
-    // probes were g2's whole small-scale regression).
-    val (e, mEdges) = graft.util.Caches.materialAdaptive(edges)
+    // MATERIALIZED: the degree count and the orientation join both read
+    // it (unshared, the edge derivation runs once per consumer). At sf10 a
+    // cached edge list squats the storage half of the unified pool the
+    // wedge stage's sorters need, the measured failure behind
+    // Caches.materialize's spill branch.
+    val e = graft.util.Caches.materialize(edges)
+    // m sizes the Bloom prune and the closing join's partitioning, so it
+    // is needed while the plan is built; on a cached e this count is the
+    // pass that fills the cache.
+    val m = e.count()
     val deg = e.select(explode(array(col("u"), col("v"))).as("x"))
       .groupBy("x").agg(count(lit(1)).as("d"))
     val key = (d: Column, id: Column) => d * lit(4294967296L) + id
-    // Materialized (size-conditionally): the wedge build reads this FOUR
-    // times (Bloom build, both wedge legs, closing-edge probe) —
-    // unmaterialized, the whole degree-join chain and the edge derivation
-    // under it would execute 4×; cached at corpus scale, it would evict
-    // the execution pool. The cardinality is mEdges (1:1 with e), so no
-    // count job runs here at all.
-    val m = mEdges
-    val oriented = graft.util.Caches.materialKnown(e
+    // MATERIALIZED: the wedge build reads this FOUR times (Bloom build,
+    // both wedge legs, closing-edge probe); unshared, the degree-join
+    // chain and the edge derivation under it would run 4×.
+    val oriented = graft.util.Caches.materialize(e
       .join(deg.select(col("x").as("u"), col("d").as("du")), "u")
       .join(deg.select(col("x").as("v"), col("d").as("dv")), "v")
       .select(
@@ -389,7 +381,7 @@ object Graph {
       .where(assert_true(
         col("s").between(0L, 2147483647L) && col("t").between(0L, 2147483647L),
         lit("triangleCounts: vertex ids must lie in [0, 2^31) for key packing"))
-        .isNull), mEdges)
+        .isNull))
     // wedges at apex s: out-neighbor pairs ordered by orientation key, so
     // the closing edge (t1→t2) is probed in ITS oriented direction. The
     // candidate pair is PACKED into one long (t1·2³² + t2 — requires ids in

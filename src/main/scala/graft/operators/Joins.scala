@@ -206,7 +206,7 @@ object Joins {
     // Cached: BOTH sides of the self-join read this frame, and Spark does
     // not share common subplans — uncached, the sessionization window +
     // groupBy chain over the full events table executes twice.
-    val bucketed = graft.util.Caches.scoped(iv.withColumn("bucket",
+    val bucketed = graft.util.Caches.materialize(iv.withColumn("bucket",
       explode(sequence(expr(s"t0 div $bucketUs"), expr(s"t1 div $bucketUs")))))
     val a = bucketed.select(col("bucket"), col("user_id").as("a_user"),
       col("session_id").as("a_session"), col("t0").as("a_t0"), col("t1").as("a_t1"))
@@ -586,7 +586,7 @@ object Joins {
     // cached: the rollup feeds BOTH the scalar max and the winner filter —
     // uncached, column pruning specializes the two subtrees (the q17
     // exchange-reuse lesson) and lineitem is scanned and shuffled twice
-    val rev = graft.util.Caches.scoped(Tables.lineitem(spark, dir)
+    val rev = graft.util.Caches.materialize(Tables.lineitem(spark, dir)
       .filter(col("l_shipdate") >= lit("1996-01-01") &&
         col("l_shipdate") < lit("1996-04-01"))
       .groupBy("l_suppkey")
@@ -807,7 +807,7 @@ object Joins {
     // then an exact long), × integral quantity
     val cents = (dec(col("l_extendedprice")) * lit(100)).cast("long") *
       col("l_quantity").cast("long")
-    val sv = graft.util.Caches.scoped(Tables.lineitem(spark, dir)
+    val sv = graft.util.Caches.materialize(Tables.lineitem(spark, dir)
       .select(col("l_suppkey"), col("l_partkey"), cents.as("cents"))
       .join(broadcast(natSupp), col("l_suppkey") === col("s_suppkey"))
       .groupBy("l_partkey")

@@ -60,7 +60,7 @@ object SetOpsWindows {
   def withGlobalRank(spark: SparkSession, df: DataFrame, rankCol: String,
                      sortCols: Seq[Column]): (DataFrame, Long) = {
     import spark.implicits._
-    val sorted = graft.util.Caches.scoped(df
+    val sorted = graft.util.Caches.materialize(df
       .repartitionByRange(sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .withColumn("__mid", monotonically_increasing_id())
@@ -94,7 +94,7 @@ object SetOpsWindows {
                           cumCol: String, sortCols: Seq[Column])
       : (DataFrame, java.math.BigDecimal) = {
     import spark.implicits._
-    val sorted = graft.util.Caches.scoped(df
+    val sorted = graft.util.Caches.materialize(df
       .repartitionByRange(sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .withColumn("__pid", spark_partition_id()))

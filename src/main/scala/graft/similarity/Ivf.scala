@@ -309,7 +309,7 @@ object Ivf {
     // probe scorer, each of which would otherwise re-run the corpus-wide
     // TakeOrdered underneath. The single-partition window is over nlist
     // (≈ √n) rows, bounded at any corpus size.
-    val ranked = graft.util.Caches.scoped(emb
+    val ranked = graft.util.Caches.materialize(emb
       .select(col("vec_id").as("cell"), col("embedding").as("ce"), ak.as("ak"))
       .orderBy(col("ak"), col("cell")).limit(nlist)
       .withColumn("r", row_number().over(

@@ -190,7 +190,7 @@ object Knn {
     // both sides of the bucket self-join read the codes; pushdown of the
     // query-side filter differentiates the subtrees and defeats exchange
     // reuse, so cache the sketch (a few KB per thousand vectors)
-    val codes = graft.util.Caches.scoped(srpCodes(emb, bits))
+    val codes = graft.util.Caches.materialize(srpCodes(emb, bits))
     // stratum semi-join: queryIds is ≤ queryN rows by construction, the one
     // legitimately-broadcast frame in this family
     val qc = codes.join(broadcast(queryIds(emb).withColumnRenamed("vec_id", "id")), "id")
@@ -209,7 +209,7 @@ object Knn {
     * width/recall escape hatch (Lv et al., VLDB'07). Candidate generation
     * stays a pure equi-join on (table, code); only the probe side fans out. */
   def lshTopKMultiprobe(emb: DataFrame, k: Int, bits: Int = lshBits): DataFrame = {
-    val codes = graft.util.Caches.scoped(srpCodes(emb, bits))
+    val codes = graft.util.Caches.materialize(srpCodes(emb, bits))
     val probes = (0 until bits).map(j => col("code").bitwiseXOR(lit(1L << j))) :+ col("code")
     val qc = codes.join(broadcast(queryIds(emb).withColumnRenamed("vec_id", "id")), "id")
       .select(col("id").as("a_id"), col("t"), explode(array(probes: _*)).as("code"))
@@ -258,7 +258,7 @@ object Knn {
       .get("spark.sql.shuffle.partitions").toInt
     val parts = math.max(defaultParts,
       (6L * nRows * (bits + 1) / 1500000L).toInt)
-    val codesE = graft.util.Caches.scoped(srpCodes(emb, bits)
+    val codesE = graft.util.Caches.materialize(srpCodes(emb, bits)
       .join(emb.select(col("vec_id").as("id"), col("embedding").as("e")), "id"))
     val probes = (0 until bits).map(j => col("code").bitwiseXOR(lit(1L << j))) :+ col("code")
     val qc = codesE.select(col("id").as("a_id"), col("t"), col("e").as("ea"),
@@ -335,7 +335,7 @@ object Knn {
     * cost ∝ bucket collisions, never |corpus|². */
   def cosineNearDupPairs(emb: DataFrame, threshold: Double,
                          bits: Int = lshBits): DataFrame = {
-    val codes = graft.util.Caches.scoped(srpCodes(emb, bits))
+    val codes = graft.util.Caches.materialize(srpCodes(emb, bits))
     val cand = codes.toDF("a_id", "t", "code")
       .join(codes.toDF("b_id", "t", "code"), Seq("t", "code"))
       .filter(col("a_id") < col("b_id"))
@@ -446,7 +446,7 @@ object Knn {
     // the reduced frame is a SKETCH (24 doubles/row, smaller than the
     // embeddings) read by both the query and corpus sides — cache it like
     // the LSH codes frame, or the 24-fold reduction pass runs twice
-    val red = graft.util.Caches.scoped(reduceVectors(emb))
+    val red = graft.util.Caches.materialize(reduceVectors(emb))
     val rq = red.toDF("a_id", "ra")
       .join(broadcast(queryIds(emb).withColumnRenamed("vec_id", "a_id")), "a_id")
     val rc = red.toDF("b_id", "rb")

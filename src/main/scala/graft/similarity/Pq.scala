@@ -156,18 +156,14 @@ object Pq {
   def pqTopK(emb: DataFrame, cbFlat: Array[Double], k: Int,
              rerank: Int): DataFrame = {
     val ksub = cbFlat.length / (m * dsub)
-    // MATERIALIZE the code index (round 16, guide §1.2 "don't compute
-    // things you throw away"): unmaterialized, the encode projection sits
-    // on the exchange-free stream side of the pair join and whole-stage
-    // codegen defers it into the join's inner loop — pq_encode (m·ksub·dsub
-    // multiplies) re-ran once per OUTPUT pair, i.e. queryN× per corpus
-    // vector (measured at sf0.1: the ADC stage was 7.9 s single-task vs
-    // 0.4 s with codes materialized; the adc kernel itself is 55 ns/call).
-    // materialAdaptive is the house pattern: block-manager cache below 5M
-    // rows, parquet spill above — at corpus scale this IS the one-pass
-    // index build the docstring promises (O(n) encode, then scans read
-    // 8 B codes instead of re-encoding).
-    val (codes, _) = graft.util.Caches.materialAdaptive(
+    // MATERIALIZE the code index: unmaterialized, the encode projection
+    // sits on the exchange-free stream side of the pair join and
+    // whole-stage codegen defers it into the join's inner loop — pq_encode
+    // (m·ksub·dsub multiplies) re-ran once per OUTPUT pair, i.e. queryN×
+    // per corpus vector (measured at sf0.1: the ADC stage was 7.9 s
+    // single-task vs 0.4 s with codes materialized). Materialized, this is
+    // the one-pass index build the docstring promises.
+    val codes = graft.util.Caches.materialize(
       emb.select(col("vec_id").as("b_id"),
         pq_encode(col("embedding"), cbFlat, m, dsub).as("codes")))
     // queryN LUT rows of m·ksub doubles — bounded at any corpus size, the
@@ -277,7 +273,7 @@ object Pq {
       concat(lit("ivfanchor|"), col("vec_id").cast("string")))
     // nlist ≈ √n rows, read by the fit, the assign, the code build and the
     // probe scorer — persisted so the corpus-wide TakeOrdered runs once
-    val anchors = graft.util.Caches.scoped(emb
+    val anchors = graft.util.Caches.materialize(emb
       .select(col("vec_id").as("cell"), col("embedding").as("ce"), ak.as("ak"))
       .orderBy(col("ak"), col("cell")).limit(nlist)
       .select("cell", "ce"))
@@ -317,14 +313,11 @@ object Pq {
   private def searchCells(emb: DataFrame, codes: DataFrame, probes: DataFrame,
                           stratum: DataFrame, cb: Array[Double], ksub: Int,
                           k: Int, rerank: Int): DataFrame = {
-    // MATERIALIZE the code index (round 16): same defect and fix as
-    // [[pqTopK]] — the codes frame ends in a pq_encode_res projection on
-    // the exchange-free stream side of the probes join, so codegen
-    // re-evaluated the residual encode once per (code, probe) MATCH
-    // (≈ queryN·nprobe/nlist× per corpus vector) instead of once per
-    // vector. One materialization pass restores the documented "encode is
-    // ONE corpus map pass" contract for s9/s9b/s9c alike.
-    val (codesM, _) = graft.util.Caches.materialAdaptive(codes)
+    // MATERIALIZE the code index: same defect and fix as [[pqTopK]] — the
+    // codes frame ends in a pq_encode_res projection on the exchange-free
+    // stream side of the probes join, so codegen re-evaluated the residual
+    // encode once per (code, probe) MATCH instead of once per vector.
+    val codesM = graft.util.Caches.materialize(codes)
     // one 16 KB LUT per query — cell-independent because the codebook is
     // shared, broadcast SEPARATELY from probes (a LUT per probe row would
     // multiply the broadcast by nprobe)
@@ -497,7 +490,7 @@ object Pq {
     // nlist rows; persisted — read by the group split, the codebook fit,
     // the code build and the probe scorer. The single-partition window is
     // over nlist (≈ √n) rows, bounded at any corpus size.
-    val ranked = graft.util.Caches.scoped(emb
+    val ranked = graft.util.Caches.materialize(emb
       .select(col("vec_id").as("cell"), col("embedding").as("ce"), ak.as("ak"))
       .orderBy(col("ak"), col("cell")).limit(nlist)
       .withColumn("r", row_number().over(Window.orderBy(col("ak"), col("cell"))))

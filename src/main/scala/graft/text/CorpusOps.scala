@@ -58,7 +58,7 @@ object CorpusOps {
     * benchmark docs and distinct shingles it collides with — which is what
     * you act on (drop or flag) before a training run. */
   def decontaminate(docs: DataFrame): DataFrame = {
-    val sh = graft.util.Caches.scoped(TextAnalysis.shingleRows(docs))
+    val sh = graft.util.Caches.materialize(TextAnalysis.shingleRows(docs))
     val bench = sh.filter(col("doc_id") % 100 === 0).toDF("bench_id", "s2")
     sh.filter(col("doc_id") % 100 =!= 0)
       .join(broadcast(bench), col("s") === col("s2"))
@@ -246,7 +246,7 @@ object CorpusOps {
     * DECIMAL(38,0); the grid test itself is unchanged. */
   def weightedSystematic(spark: SparkSession, docs: DataFrame, k: Int): DataFrame = {
     import spark.implicits._
-    val ranged = graft.util.Caches.scoped(
+    val ranged = graft.util.Caches.materialize(
       docs.select(col("doc_id").cast("long"), col("n_chars").cast("long"))
         .repartitionByRange(col("doc_id"))
         .sortWithinPartitions("doc_id")

@@ -193,7 +193,7 @@ object TextAnalysis {
     // scan (t22); widen BEFORE the tokenize so the CPU spreads. Lazy plan
     // only — t14's bench action prunes the scored subtree and must keep
     // paying nothing (the d6 lesson). No-op on a parallel scan.
-    val docBigrams = graft.util.Caches.scoped(
+    val docBigrams = graft.util.Caches.materialize(
       graft.util.Par.widen(Tables.documents(spark, dir))
         .select(col("doc_id"), t.as("t"))
         .select(col("doc_id"), explode(zip_with(
@@ -233,7 +233,7 @@ object TextAnalysis {
     * discipline). Docs with no scoreable bigram land in an explicit
     * `unscored` bucket rather than vanishing. */
   def ccnetBuckets(spark: SparkSession, dir: String): DataFrame = {
-    val scored = graft.util.Caches.scoped(
+    val scored = graft.util.Caches.materialize(
       lmScore(spark, dir).select("doc_id", "pooled_cond_p"))
     val (ranked, n) = graft.operators.SetOpsWindows.withGlobalRank(spark,
       scored.filter(col("pooled_cond_p").isNotNull), "rk",
@@ -265,7 +265,7 @@ object TextAnalysis {
     * vs the ~40-word synthetic vocabulary). */
   def cmsHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
     val depth = 4; val width = 64
-    val words = graft.util.Caches.scoped(
+    val words = graft.util.Caches.materialize(
       Tables.documents(spark, dir)
         .select(explode(tokens(lower(trim(col("text"))))).as("w")))
     val sketch = words.agg(

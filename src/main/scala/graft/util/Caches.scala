@@ -1,48 +1,74 @@
 package graft.util
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.storage.StorageLevel
 
-/** Registry for operator-internal persisted frames (sketch/shingle tables
-  * reused across self-join branches). Operators register via [[scoped]];
-  * session drivers (Verify/Bench) call [[releaseAll]] between queries so a
-  * long-lived session's storage memory stays bounded instead of
-  * accumulating one cached frame per invocation. */
+/** Materialization of operator-internal frames that several consumers
+  * share (the enrichment exact join, g2's edge list, sketch and shingle
+  * tables reused across self-join branches). A DataFrame DAG shares no
+  * common subplans, so without this each consumer re-runs the derivation.
+  *
+  * One rule, decided from the plan alone (no job): a frame whose inputs are
+  * at most [[spillInputBytes]] is persisted lazily at MEMORY_AND_DISK, and
+  * the first action that reads it fills the cache; a larger one is written
+  * to parquet and read back, so no cached copy competes with the consumer
+  * stages' sorters for the unified memory pool (the measured sf10 g2
+  * failure: "Unable to acquire 32768 bytes, got 0", even at
+  * MEMORY_AND_DISK_SER). Session drivers (Verify, Bench) call
+  * [[releaseAll]] between queries, so a long-lived session holds no frame
+  * past the query that made it. */
 object Caches {
+
+  /** Input bytes above which [[materialize]] spills to parquet. The rule it
+    * replaces spilled past 5M rows of the materialized frame. Rows per
+    * input byte differ by site; at sf0.1 (parquet bytes as Spark's file
+    * index reports them):
+    *   - g2 edges: 1,196,000 rows from 10.8 MB of lineitem, 0.11 rows/B,
+    *     so 5M edges ≈ 45 MB of input;
+    *   - j02 exact join: 150,000 rows from 3.0 MB of orders + customer,
+    *     0.049 rows/B, so 5M facts ≈ 100 MB of input.
+    * 64 MB lies inside that 45–100 MB bracket and keeps both old choices at
+    * sf1: g2's 143 MB of lineitem spills (12M edges), j02's 21 MB (1.5M
+    * facts) stays cached. The q-gram index expands more (0.68 rows/B of
+    * dim input), so it stays cached up to ~45M grams, not 5M. */
+  private val spillInputBytes: Long = 64L << 20
+
   private val frames = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  def scoped(df: DataFrame): DataFrame = {
-    df.persist()
-    frames.add(df)
-    df
-  }
-
   private val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
 
-  /** Materialize a corpus-scaled intermediate OUTSIDE the block manager:
-    * write it as compressed parquet and hand back a scan of the file.
-    * Block-manager caching (any storage level) competes with execution for
-    * the unified pool — at 100M+ rows the cached blocks squat the protected
-    * storage region and 32 concurrent shuffle sorters thrash against what's
-    * left ("Unable to acquire 32768 bytes, got 0", measured on g2's sf10
-    * run even with MEMORY_AND_DISK_SER). A parquet spill costs one write
-    * plus columnar re-scans, keeps ZERO bytes of heap between stages, and
-    * is exactly what a production job does when it checkpoints a reused
-    * intermediate to the cluster FS. Honors an explicit checkpoint dir when
-    * the session has one (the cluster case — local temp would not be shared
-    * across executors); falls back to a process-local temp dir. */
-  def material(df: DataFrame): DataFrame = {
+  /** The frame to share among consumers: `df` persisted lazily, or a scan
+    * of its parquet spill when its inputs exceed [[spillInputBytes]]. */
+  def materialize(df: DataFrame): DataFrame =
+    if (inputBytes(df.queryExecution.optimizedPlan) <= spillInputBytes) {
+      frames.add(df.persist(StorageLevel.MEMORY_AND_DISK))
+      df
+    } else spill(df)
+
+  /** Summed size of the plan's leaves. A cached frame counts as the inputs
+    * it was derived from, so the answer does not depend on whether an
+    * earlier action has filled that cache yet. */
+  private def inputBytes(plan: LogicalPlan): BigInt = plan match {
+    case r: InMemoryRelation => inputBytes(r.cacheBuilder.logicalPlan)
+    case p if p.children.isEmpty => p.stats.sizeInBytes
+    case p => p.children.map(inputBytes).sum
+  }
+
+  /** Writes `df` as parquet and returns a scan of it. Uses the session's
+    * checkpoint dir when it has one (the cluster case: a local temp dir is
+    * not shared across executors), else a process-local temp dir. */
+  private def spill(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val base = spark.sparkContext.getCheckpointDir match {
       case Some(cp) => new org.apache.hadoop.fs.Path(cp, "graft-mat-" +
         java.util.UUID.randomUUID().toString.take(12)).toString
       case None =>
-        // The temp-dir fallback is only sound when driver and executors
-        // share a filesystem: on a real cluster each task would write its
-        // split to ITS OWN local disk and the follow-up read on the driver
-        // would see a subset of the rows — silently wrong results, not an
-        // error. Enforce the documented boundary instead of risking that.
+        // On a real cluster each task would write its split to its own
+        // local disk and the driver's read-back would see a subset of the
+        // rows: silently wrong, so refuse instead.
         require(spark.sparkContext.isLocal,
-          "Caches.material: no checkpoint dir configured on a non-local " +
+          "Caches.materialize: no checkpoint dir configured on a non-local " +
             "cluster; a driver-local temp dir would scatter task output " +
             "across executor disks. Call sc.setCheckpointDir(<shared path>).")
         val p = java.nio.file.Files.createTempDirectory("graft-mat-")
@@ -53,52 +79,8 @@ object Caches {
     spark.read.parquet(base)
   }
 
-  /** Rows above which [[materialAdaptive]] spills to parquet instead of the
-    * block manager. Below it the frame is a few hundred MB at most —
-    * caching is strictly cheaper (no write + columnar re-decode) and too
-    * small to squat the unified pool; above it the parquet round-trip is
-    * what keeps the heap clear for the consumer stages' sorters (the
-    * measured sf10 g2 failure mode). */
-  val materialRowThreshold: Long = 5000000L
-
-  /** Size-conditional [[material]]: persist, count (one pass — the count
-    * both materializes the cache and measures it), then keep the cached
-    * frame when small or stream it out to parquet (a cache read, not a
-    * re-derivation) and release the cache when large. Returns the frame to
-    * consume plus the measured row count so callers that need the
-    * cardinality anyway (g2 sizes its join partitioning from it) don't pay
-    * a second count job. */
-  def materialAdaptive(df: DataFrame): (DataFrame, Long) = {
-    // Deserialized MEMORY_AND_DISK: the small path re-reads this frame up
-    // to five times — a SER cache would pay a full decode per read. The
-    // large path unpersists right after the parquet write, so the
-    // deserialized footprint is transient even at corpus scale.
-    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = cached.count()
-    if (n <= materialRowThreshold) {
-      frames.add(cached)
-      (cached, n)
-    } else {
-      val out = material(cached)
-      cached.unpersist(blocking = false)
-      (out, n)
-    }
-  }
-
-  /** [[materialAdaptive]] when the caller ALREADY KNOWS the cardinality
-    * (e.g. a 1:1 projection of a frame that was just counted): skips the
-    * persist+count probe entirely — the measured ~2× small-scale overhead
-    * on g2 at sf0.1, where the probe's blocking materialization pass cost
-    * as much as the work it gated. Small path: lazy cache, the first
-    * consumer materializes it; large path: straight parquet write, no
-    * block-manager round-trip at all. */
-  def materialKnown(df: DataFrame, n: Long): DataFrame =
-    if (n <= materialRowThreshold) {
-      val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      frames.add(cached)
-      cached
-    } else material(df)
-
+  /** Unpersists every frame [[materialize]] cached and deletes every local
+    * spill directory it wrote. */
   def releaseAll(): Unit = {
     var f = frames.poll()
     while (f != null) { f.unpersist(blocking = false); f = frames.poll() }

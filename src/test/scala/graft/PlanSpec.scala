@@ -135,10 +135,10 @@ class PlanSpec extends SparkSpec {
     * stats would otherwise broadcast everything and hide a stray hint.) */
   def planNoAutoBroadcast(name: String): String = {
     val key = "spark.sql.autoBroadcastJoinThreshold"
-    // ALSO disable the ADAPTIVE conversion threshold (round 16): operators
-    // that materialize multi-consumer frames (Caches.materialAdaptive)
-    // EXECUTE that sub-frame during query construction, and its embedded
-    // final adaptive plan would otherwise carry runtime-chosen
+    // ALSO disable the ADAPTIVE conversion threshold (round 16): a
+    // sub-frame that runs during query construction (g2's edge count,
+    // which fills its Caches.materialize cache) embeds its final adaptive
+    // plan, which would otherwise carry runtime-chosen
     // BroadcastExchanges — by-design AQE decisions from measured tiny test
     // frames, not the static corpus-scaled hints these assertions hunt.
     // With both thresholds at -1, only explicit hints can broadcast.
@@ -148,7 +148,7 @@ class PlanSpec extends SparkSpec {
     spark.conf.set(key, "-1")
     spark.conf.set(akey, "-1")
     // Plan against a clean cache: if another suite (QueriesSmokeSpec) left a
-    // Caches.scoped frame cached, the printed InMemoryRelation fragments
+    // Caches.materialize frame cached, the printed InMemoryRelation fragments
     // carry their own inner BroadcastExchange nodes and inflate the counts
     // these tests assert on (observed order-dependent: 16 vs 4 in d9).
     spark.catalog.clearCache()

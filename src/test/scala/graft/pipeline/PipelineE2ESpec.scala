@@ -1,20 +1,30 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** §3.1 end-to-end: the assembled reference pipeline (stages 3-8) as one
   * lazy plan — statement words → transactions → two-phase vendor
   * enrichment → report projection → sinks. */
+object PipelineE2ESpec {
+  /** The vendor_mappings fixture: two exact vendors, one the fuzzy phase
+    * finds by containment. */
+  def mappings(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq(
+      (1L, "AMAZON MKTPL", "51000", "01", "100", "2001", "200"),
+      (2L, "THE BIG BOX STORE COMPANY", "53000", "03", "102", "2003", "202"),
+      (3L, "COFFEE SHOP", "52000", "02", "101", "2002", "201")
+    ).toDF("id", "vendor", "gl_account", "location", "program", "funder", "department")
+  }
+}
+
 class PipelineE2ESpec extends SparkSpec {
   import spark.implicits._
   lazy val words = StatementSpec.words.toDF()
 
-  val mappings = Seq(
-    (1L, "AMAZON MKTPL", "51000", "01", "100", "2001", "200"),
-    (2L, "THE BIG BOX STORE COMPANY", "53000", "03", "102", "2003", "202"),
-    (3L, "COFFEE SHOP", "52000", "02", "101", "2002", "201")
-  ).toDF("id", "vendor", "gl_account", "location", "program", "funder", "department")
+  val mappings = PipelineE2ESpec.mappings(spark)
 
   lazy val report = Report.pipeline(words, mappings)
 
