@@ -124,7 +124,8 @@ object Bench {
     // default-harness rows of the same query — record the effective values
     // in the JSON so the distinction is machine-readable, not a README
     // footnote. max_heap_mb is the JVM's real -Xmx-derived ceiling (the
-    // truthful form of SPARK_DRIVER_MEM, which may be unset).
+    // truthful form of SPARK_DRIVER_MEM, which may be unset); cpus is the
+    // session's default parallelism (the truthful form of SPARK_GRAFT_CPUS).
     // the conf value is only guaranteed numeric when set via the validated
     // env var — interpolating any other source unquoted could emit invalid
     // JSON; parse to Int, else emit it as an escaped JSON string
@@ -135,7 +136,7 @@ object Bench {
     val harness =
       s""""harness":{"shuffle_partitions":$shufParts,""" +
       s""""max_heap_mb":${Runtime.getRuntime.maxMemory() / (1024 * 1024)},""" +
-      s""""cpus":"${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}","retry_cap":$retryCap,""" +
+      s""""cpus":${spark.sparkContext.defaultParallelism},"retry_cap":$retryCap,""" +
       // the codec is part of the tier harness too (round 16: g1b at sf100
       // only completes under zstd) — read back the EFFECTIVE conf, same
       // truthful-form rule as max_heap_mb; values come from the validated

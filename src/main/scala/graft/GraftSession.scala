@@ -7,8 +7,12 @@ import org.apache.spark.sql.SparkSession
   * `shuffle.partitions` ≈ total cores; AQE coalesces/replans at runtime so
   * the same code scales from local[4] to a 1000-executor cluster. */
 object GraftSession {
-  def apply(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-            cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
+  /** Local core count: `SPARK_GRAFT_CPUS` when set, else this machine's. */
+  private val defaultCpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
+  def apply(master: String = s"local[$defaultCpus]",
+            cpus: String = defaultCpus): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName("graft")

@@ -6,21 +6,9 @@ import org.apache.spark.sql.functions._
 /** Scratch profiler: times sub-stages of the heavy queries. Not part of the
   * driver contract. */
 object Profile {
-  def t(name: String)(df: => DataFrame): Unit = {
-    val t0 = System.nanoTime()
-    val n = df.count()
-    println(f"${(System.nanoTime() - t0) / 1e9}%8.2fs  $name ($n rows)")
-  }
-
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if (args.headOption.contains("dispatch")) { profileDispatchStats(dir); return }
     if (args.headOption.contains("s7vol")) { profileS7Volume(dir); return }
-    if (args.headOption.contains("g1b")) { profileG1b(dir); return }
-    if (args.headOption.contains("d4vol")) { profileD4Volumes(dir); return }
-    if (args.headOption.contains("d4r")) { profileD4R(dir); return }
-    if (args.headOption.contains("d4ab")) { profileD4AB(dir); return }
-    if (args.headOption.contains("d4part")) { profileD4Part(dir); return }
     if (args.headOption.contains("pqrecall")) { profilePqRecall(dir); return }
     if (args.headOption.contains("s9bdiag")) { profileS9bDiag(dir); return }
     if (args.headOption.contains("mawidth")) { profileMaWidth(dir); return }
@@ -30,166 +18,9 @@ object Profile {
     if (args.headOption.contains("s8var")) { profileS8Var(dir); return }
     if (args.headOption.contains("plans")) { profilePlans(dir, args.drop(1)); return }
     if (args.headOption.contains("loadcost")) { profileLoadCost(dir); return }
-    val spark = GraftSession(s"local[8]", "8")
-    import graft.text.TextAnalysis.{shingles, tokens}
-
-    val docs = Tables.documents(spark, dir)
-    docs.count()  // warm
-
-    args.headOption.foreach {
-      case "shj" => spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-      case _ =>
-    }
-
-    val sh = docs.select(col("doc_id"), explode(shingles(tokens(col("text")))).as("s"))
-    t("shingleRows")(sh)
-    t("shingle freq")(sh.groupBy("s").count())
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    t("naive inverted join + count")(
-      sh.toDF("a_id", "s").join(sh.toDF("b_id", "s2"),
-          col("s") === col("s2") && col("a_id") < col("b_id"))
-        .groupBy("a_id", "b_id").agg(count(lit(1)).as("common")))
-    t("d2 plain (inverted+verify)")(graft.dedup.Dedup.ngramJaccardPairs(docs, 0.5))
-    t("d2 prefix-filtered")(graft.dedup.Dedup.ngramJaccardPairsPrefix(docs, 0.5))
-    t("d3 bands")(graft.dedup.Dedup.minHashBands(
-      graft.text.TextAnalysis.shingleRows(docs)))
-    t("d3 full")(graft.dedup.Dedup.minHashLshPairs(docs, 0.5))
-    val simCodes = graft.dedup.Dedup.simHash(docs)
-    t("d4 codes")(simCodes)
-    t("d4 banded candidates (vs n(n-1)/2 all-pairs)")(
-      graft.dedup.Dedup.simHashCandidates(simCodes, 10))
-    t("d4 full")(graft.dedup.Dedup.simHashPairs(docs, 10))
-    t("s2 codes")(graft.similarity.Knn.srpCodes(Tables.embeddings(spark, dir)))
-    t("s2 full")(graft.similarity.Knn.lshTopK(Tables.embeddings(spark, dir), 5))
-    t("d5 neardup")(graft.similarity.Knn.cosineNearDupPairs(Tables.embeddings(spark, dir), 0.3))
-    t("a07 coa")(graft.operators.Aggregates.coaClassify(spark, dir))
-    t("j02 twophase")(graft.operators.Joins.j02TwoPhaseEnrich(spark, dir))
-    spark.stop()
-  }
-
-  /** Partitioning experiments on the combo join at sf10 scale. */
-  def profileD4Part(dir: String): Unit = {
-    val spark = GraftSession()
-    import org.apache.spark.sql.functions._
-    val docs = Tables.documents(spark, dir)
-    docs.count()
-    val codes = graft.dedup.Dedup.simHash(docs).persist()
-    codes.count()
-    for (parts <- Seq(128, 512)) {
-      t(s"d4 survivors r=2 SHJ parts=$parts")(
-        graft.dedup.Dedup.simHashSurvivorsParts(codes, 10, 2, parts))
-    }
-    t("d4 survivors r=1 SHJ parts=512")(
-      graft.dedup.Dedup.simHashSurvivorsParts(codes, 10, 1, 512))
-    spark.stop()
-  }
-
-  /** A/B: the combo join at r=1 with masked-code keys vs old-style
-    * shifted-down block values — isolates join-key hash/partition luck. */
-  def profileD4AB(dir: String): Unit = {
-    val spark = GraftSession()
-    val docs = Tables.documents(spark, dir)
-    docs.count()
-    val codes = graft.dedup.Dedup.simHash(docs).persist()
-    codes.count()
-    import org.apache.spark.sql.functions._
-    val bits = graft.dedup.Dedup.simHashBits
-    val m = 11
-    val bounds = (0 until m).scanLeft(0) { (acc, b) =>
-      acc + bits / m + (if (b < bits % m) 1 else 0) }
-    def mk(shifted: Boolean) = {
-      val structs = (0 until m).map { b =>
-        val start = bounds(b); val width = bounds(b + 1) - start
-        val e = if (shifted) s"(simhash >> $start) & ${(1L << width) - 1}L"
-                else s"simhash & ${(((1L << width) - 1) << start)}L"
-        struct(lit(b).as("cmb"), expr(e).as("bv"))
-      }
-      codes.select(col("doc_id"), col("simhash"), explode(array(structs: _*)).as("s"))
-        .select(col("doc_id"), col("simhash"), col("s.cmb").as("cmb"), col("s.bv").as("bv"))
-    }
-    for (shifted <- Seq(true, false, true, false)) {
-      val rows = mk(shifted)
-      t(s"d4 r=1 join shifted=$shifted")(
-        rows.toDF("a_id", "ha", "cmb", "bv")
-          .join(rows.toDF("b_id", "hb", "cmb", "bv"), Seq("cmb", "bv"))
-          .filter(col("a_id") < col("b_id"))
-          .filter(bit_count(expr("ha ^ hb")) <= 10))
-    }
-    // old round-9 shape: CACHED exploded table, join reads the cache twice
-    val blocksOld = mk(true).persist()
-    blocksOld.count()
-    for (i <- 1 to 2)
-      t(s"d4 r=1 join CACHED-blocks (old shape) #$i")(
-        blocksOld.toDF("a_id", "ha", "cmb", "bv")
-          .join(blocksOld.toDF("b_id", "hb", "cmb", "bv"), Seq("cmb", "bv"))
-          .filter(col("a_id") < col("b_id"))
-          .filter(bit_count(expr("ha ^ hb")) <= 10))
-    val q = blocksOld.toDF("a_id", "ha", "cmb", "bv")
-      .join(blocksOld.toDF("b_id", "hb", "cmb", "bv"), Seq("cmb", "bv"))
-      .filter(col("a_id") < col("b_id"))
-      .filter(bit_count(expr("ha ^ hb")) <= 10)
-    println("=== OLD SHAPE PLAN ==="); q.explain("formatted")
-    val q2 = mk(false).toDF("a_id", "ha", "cmb", "bv")
-      .join(mk(false).toDF("b_id", "hb", "cmb", "bv"), Seq("cmb", "bv"))
-      .filter(col("a_id") < col("b_id"))
-      .filter(bit_count(expr("ha ^ hb")) <= 10)
-    println("=== NEW SHAPE PLAN ==="); q2.explain("formatted")
-    spark.stop()
-  }
-
-  /** End-to-end d4 timing per explicit r, at bench parallelism. */
-  def profileD4R(dir: String): Unit = {
-    val spark = GraftSession()
-    val docs = Tables.documents(spark, dir)
-    docs.count() // warm
-    val codes = graft.dedup.Dedup.simHash(docs).persist()
-    t("d4 codes (simHash agg)")(codes)
-    t("d4 survivors r=1 (join+verify, no distinct)")(
-      graft.dedup.Dedup.simHashSurvivorsRaw(codes, 10, 1))
-    t("d4 survivors r=2 (join+verify, no distinct)")(
-      graft.dedup.Dedup.simHashSurvivorsRaw(codes, 10, 2))
-    codes.unpersist()
-    for (r <- Seq(1, 2, 0)) {
-      t(s"d4 maxHamming=10 r=$r")(graft.dedup.Dedup.simHashPairsR(docs, 10, r))
-      graft.util.Caches.releaseAll()
-    }
-    spark.stop()
-  }
-
-  /** Candidate-volume report behind the d4 r-choice cost model: exact
-    * Σ C(bucket,2) join-row counts for r=1 vs r=2 at both thresholds. */
-  def profileD4Volumes(dir: String): Unit = {
-    val spark = GraftSession()
-    val docs = Tables.documents(spark, dir)
-    val codes = graft.dedup.Dedup.simHash(docs).persist()
-    val n = codes.count()
-    for (k <- Seq(10, 3); r <- Seq(1, 2)) {
-      val agg = graft.dedup.Dedup.simHashCandidatesRaw(codes, k, r)
-      println(s"n=$n maxHamming=$k r=$r inputRows=${agg._2} joinRows=${agg._1}")
-    }
-    spark.stop()
-  }
-
-  /** Stage-by-stage timing of g1b_ppr at bench parallelism. */
-  def profileG1b(dir: String): Unit = {
-    val spark = GraftSession()
-    val li = Tables.lineitem(spark, dir).select("l_orderkey", "l_suppkey")
-    val ord = Tables.orders(spark, dir).select("o_orderkey", "o_custkey")
-    li.count(); ord.count() // warm
-    val pw = li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-      .groupBy((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
-      .agg(countDistinct("o_orderkey").as("w"))
-    t("pw (pair weights)")(pw)
-    val edges = pw.select(col("c").as("src"), col("s").as("dst"), col("w"))
-      .unionByName(pw.select(col("s").as("src"), col("c").as("dst"), col("w")))
-    t("edges")(edges)
-    val t0 = System.nanoTime()
-    val n = graft.operators.Graph.personalizedPageRank(edges,
-      Tables.customer(spark, dir).filter(col("c_mktsegment") === "BUILDING")
-        .select((col("c_custkey") * 2).as("id")), 5).count()
-    println(f"${(System.nanoTime() - t0) / 1e9}%8.2fs  ppr 5 iters ($n rows)")
-    t("g1b end-to-end")(graft.operators.Graph.g1bPersonalized(spark, dir))
-    spark.stop()
+    System.err.println("usage: Profile <mode> [args]; modes: jobs <query,...>, " +
+      "plans <query,...>, pqrecall, mawidth, s9bdiag, s7vol, j02plan, s8stage, " +
+      "s8var, loadcost")
   }
 
   /** Recall of the PQ/IVFADC tiers vs exact brute force at a given Lloyd
@@ -626,39 +457,6 @@ object Profile {
     val t2 = System.nanoTime()
     println(f"[s7vol] n=$n bits=$bits rawPairs=$rawPairs distinctCand=$cand " +
       f"joinCount=${(t1 - t0) / 1e9}%.1fs distinct=${(t2 - t1) / 1e9}%.1fs")
-    spark.stop()
-  }
-
-  /** Round-12 dispatcher proof (VERDICT #4): time each family's DECIDING
-    * STATISTIC standalone at the given SF (the conservative upper bound —
-    * in the real dispatchers the d2c shingle frame is cache-shared with
-    * the chosen variant, and d9c/s3d reuse Tables.cachedCount) and print
-    * the ROUTED CHOICE, so the sf10 claims "stat cost < 10% of winner"
-    * and "route matches the measured winner" are both direct reads. */
-  def profileDispatchStats(dir: String): Unit = {
-    val spark = GraftSession()
-    val docs = Tables.documents(spark, dir)
-    docs.count() // warm file listing + footers
-    for (it <- 1 to 3) {
-      graft.util.Caches.releaseAll()
-      var tPrev = System.nanoTime()
-      def mark(name: String): Unit = {
-        val now = System.nanoTime()
-        println(f"[dispatch $it] ${(now - tPrev) / 1e9}%8.2fs  $name")
-        tPrev = now
-      }
-      // d2c: the REAL chooser (count + md5 doc sample + shingle df
-      // aggregate with the thinning correction) — its returned frame is
-      // lazy, so only the statistic jobs execute inside the mark
-      val (d2route, _) = graft.dedup.Dedup.ngramJaccardChoose(docs, 0.5)
-      mark(s"d2c stat (sampled chooser) -> route $d2route")
-      // d9c / s3d: corpus cardinality (a raw count job — NOT the memo,
-      // time the real work the first invocation pays)
-      val n = Tables.embeddings(spark, dir).count()
-      val d9route = graft.dedup.SemDedup.chooseSemDedup(n)
-      val s3route = graft.similarity.Ivf.chooseAnchorIvf(n)
-      mark(s"d9c/s3d stat n=$n -> d9c route $d9route, s3d route $s3route")
-    }
     spark.stop()
   }
 }

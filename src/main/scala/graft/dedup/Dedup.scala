@@ -40,6 +40,41 @@ object Dedup {
   private def shingleRows(docs: DataFrame): DataFrame =
     graft.text.TextAnalysis.shingleRows(docs)
 
+  /** Repartitions `docs` to the session's default parallelism when its
+    * planned partition count is below it; otherwise returns it untouched.
+    * The engine's one scan-widening rule, for the plan shape where it
+    * measured a gain: the shingle explode off a one-split scan (a
+    * single-row-group parquet table) fused into one dominant stage, which
+    * would otherwise run on one core. That is the Σdf² inverted self-join
+    * behind [[ngramJaccardPairs]] and [[containmentPairs]], the band-index
+    * join of [[incrementalNearDupPairs]], and the shingle aggregate of the
+    * d2c/d11c dispatch statistic (d11c measured 3.3 → 5.0 s at sf0.1 on 4
+    * cores without it). Other scans measured no gain from widening, and
+    * multi-stage shingle consumers pay per-stage task overhead on the
+    * extra partitions. On an already parallel scan `spread` does nothing.
+    * Round-robin placement is deterministic under retries
+    * (sort-before-repartition), and every downstream fold is
+    * order-independent, so results do not depend on the core count. */
+  private def spread(docs: DataFrame): DataFrame = {
+    val want = docs.sparkSession.sparkContext.defaultParallelism
+    // rdd.getNumPartitions plans the frame but launches no job
+    if (docs.rdd.getNumPartitions < want) docs.repartition(want) else docs
+  }
+
+  /** (b_id, a_id, common, na, nb) for every doc pair sharing a shingle:
+    * the inverted-index self-join with direct overlap counting behind the
+    * naive d2 and d11 joins (one shuffle on the shingle key, one on the
+    * pair). `common` is the shared-shingle count, `na`/`nb` the sizes. */
+  private def overlapCounts(docs: DataFrame): DataFrame = {
+    val sh = graft.util.Caches.materialize(shingleRows(spread(docs)))
+    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    sh.toDF("a_id", "s")
+      .join(sh.toDF("b_id", "s2"), col("s") === col("s2") && col("a_id") < col("b_id"))
+      .groupBy("a_id", "b_id").agg(count(lit(1)).as("common"))
+      .join(sizes.toDF("a_id", "na"), "a_id")
+      .join(sizes.toDF("b_id", "nb"), "b_id")
+  }
+
   /** D2: exact n-gram Jaccard similarity join — inverted-index self-join
     * with direct overlap counting (one join + one aggregation). The right
     * default when the pairs-sharing-a-shingle volume (Σ df²) is tractable,
@@ -47,24 +82,12 @@ object Dedup {
     * for zipf-distributed real text where a few hot shingles make Σ df²
     * explode, use [[ngramJaccardPairsPrefix]] (equivalent results, see
     * DedupSpec). */
-  def ngramJaccardPairs(docs: DataFrame, threshold: Double): DataFrame = {
-    // widened input (round-16 A/B): the naive variant is ONE dominant
-    // Sigma-df^2 self-join stage fused with the shingle explode -- exactly
-    // the shape the scan-parallelism guard pays for (measured -1.23 s at
-    // sf0.1; no-op at real scale where the scan is already parallel)
-    val sh = graft.util.Caches.materialize(shingleRows(graft.util.Par.widen(docs)))
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val common = sh.toDF("a_id", "s")
-      .join(sh.toDF("b_id", "s2"), col("s") === col("s2") && col("a_id") < col("b_id"))
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.toDF("a_id", "na"), "a_id")
-      .join(sizes.toDF("b_id", "nb"), "b_id")
+  def ngramJaccardPairs(docs: DataFrame, threshold: Double): DataFrame =
+    overlapCounts(docs)
       .withColumn("jaccard",
         col("common").cast("double") / (col("na") + col("nb") - col("common")))
       .filter(col("jaccard") >= threshold)
       .select(col("a_id"), col("b_id"), col("jaccard"))
-  }
 
   /** D2 scale path: **prefix filtering** (Bayardo et al., WWW'07; Chaudhuri
     * et al., ICDE'06). Under a global rarity order on shingles, any pair
@@ -136,17 +159,8 @@ object Dedup {
     * ORACLE form, like naive d2; [[containmentPairsPrefix]] is the scale
     * path (MinHash bands would be the WRONG one: bands sample the union,
     * so high-containment/low-resemblance pairs rarely collide). */
-  def containmentPairs(docs: DataFrame, tau: Double): DataFrame = {
-    // widened input -- same single-dominant-stage rationale as
-    // [[ngramJaccardPairs]] (measured -0.70 s at sf0.1)
-    val sh = graft.util.Caches.materialize(shingleRows(graft.util.Par.widen(docs)))
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val common = sh.toDF("a_id", "s")
-      .join(sh.toDF("b_id", "s2"), col("s") === col("s2") && col("a_id") < col("b_id"))
-      .groupBy("a_id", "b_id").agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.toDF("a_id", "na"), "a_id")
-      .join(sizes.toDF("b_id", "nb"), "b_id")
+  def containmentPairs(docs: DataFrame, tau: Double): DataFrame =
+    overlapCounts(docs)
       .select(explode(array(
         struct(col("a_id").as("contained_id"), col("b_id").as("container_id"),
           (col("common").cast("double") / col("na")).as("containment")),
@@ -154,7 +168,6 @@ object Dedup {
           (col("common").cast("double") / col("nb")).as("containment")))).as("p"))
       .select(col("p.contained_id"), col("p.container_id"), col("p.containment"))
       .filter(col("containment") >= tau)
-  }
 
   /** D11 scale path: ONE-SIDED prefix filtering. The Bayardo prefix rule
     * adapts to containment on the CONTAINED side only: c(A,B) ≥ τ forces a
@@ -272,9 +285,7 @@ object Dedup {
       else docs.filter(
         md5Hash60(concat(lit("d2cstat|"), col("doc_id").cast("string")))
           < lit((f * (1L << 60).toDouble).toLong))
-    // widened (round-16 profile): the stats shingle aggregate ran as a
-    // 0.3 s single-task job off the 1-split scan in both dispatchers
-    val row = shingleRows(graft.util.Par.widen(statDocs))
+    val row = shingleRows(spread(statDocs))
       .groupBy("s").agg(count(lit(1)).as("df"))
       .agg((sum(col("df") * col("df")).cast("double") /
         sum(col("df")).cast("double")).as("r"))
@@ -561,53 +572,14 @@ object Dedup {
     * decisively right. */
   private val comboInputWeight = 4L
 
-  /** The combo join + inline Hamming verify WITHOUT the survivor dedup —
-    * Profile uses it to separate join cost from distinct cost. */
-  def simHashSurvivorsRaw(codes: DataFrame, maxHamming: Int, r: Int): DataFrame = {
-    val rows = comboRows(codes, maxHamming, r).drop("md")
-    rows.toDF("a_id", "ha", "cmb", "bv")
-      .join(rows.toDF("b_id", "hb", "cmb", "bv").hint("SHUFFLE_HASH"),
-        Seq("cmb", "bv"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("hamming", bit_count(expr("ha ^ hb")).cast("bigint"))
-      .filter(col("hamming") <= maxHamming)
-      .select("a_id", "b_id", "hamming")
-  }
-
-  /** [[simHashSurvivorsRaw]] with explicit join parallelism — Profile's
-    * partitioning experiment. */
-  def simHashSurvivorsParts(codes: DataFrame, maxHamming: Int, r: Int,
-                            parts: Int): DataFrame = {
-    val rows = comboRows(codes, maxHamming, r).drop("md")
-    rows.toDF("a_id", "ha", "cmb", "bv").repartition(parts, col("cmb"), col("bv"))
-      .join(rows.toDF("b_id", "hb", "cmb", "bv")
-        .repartition(parts, col("cmb"), col("bv")).hint("SHUFFLE_HASH"),
-        Seq("cmb", "bv"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("hamming", bit_count(expr("ha ^ hb")).cast("bigint"))
-      .filter(col("hamming") <= maxHamming)
-      .select("a_id", "b_id", "hamming")
-  }
-
   /** (joinRows, inputRows) of the r-decomposition without running the join —
-    * the exact quantities the r-choice cost model weighs, exposed for Profile's
-    * volume report. */
-  def simHashCandidatesRaw(codes: DataFrame, maxHamming: Int, r: Int): (Long, Long) = {
+    * the exact quantities the r-choice cost model weighs. */
+  private def simHashCandidatesRaw(codes: DataFrame, maxHamming: Int, r: Int): (Long, Long) = {
     val agg = comboRows(codes, maxHamming, r).groupBy("cmb", "bv")
       .agg(count(lit(1)).as("c"))
       .agg(sum(expr("c * (c - 1) DIV 2")).as("vol"), sum(col("c")).as("rows"))
       .head()
     (agg.getLong(0), agg.getLong(1))
-  }
-
-  /** The pigeonhole candidate stage of [[simHashPairsR]], exposed so Profile
-    * can report candidate volume vs n²/2. `codes` = (doc_id, simhash). */
-  def simHashCandidates(codes: DataFrame, maxHamming: Int, r: Int = 1): DataFrame = {
-    val rows = comboRows(codes, maxHamming, r).select("doc_id", "cmb", "bv")
-    rows.toDF("a_id", "cmb", "bv")
-      .join(rows.toDF("b_id", "cmb", "bv"), Seq("cmb", "bv"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
   }
 
   // ---- oracle-checked queries --------------------------------------------
@@ -698,7 +670,7 @@ object Dedup {
     * only change streaming ingest needs (foreachBatch + the k2 upsert sink
     * appends accepted docs' bands to the index). */
   def incrementalNearDupPairs(docs: DataFrame, threshold: Double): DataFrame = {
-    val sh = graft.util.Caches.materialize(shingleRows(docs))
+    val sh = graft.util.Caches.materialize(shingleRows(spread(docs)))
     val bands = graft.util.Caches.materialize(minHashBands(sh))
     val probe = bands.filter(col("doc_id") % 10 === 0).toDF("a_id", "band", "sig")
     val index = bands.filter(col("doc_id") % 10 =!= 0).toDF("b_id", "band2", "sig2")
@@ -710,10 +682,7 @@ object Dedup {
   }
 
   def d10IncrementalNearDup(spark: SparkSession, dir: String): DataFrame =
-    // widened input (round-16 profile): the band-index build dominated the
-    // query as a single-task broadcast-build job (0.9 s of the 1.1 s quiet
-    // wall) off the 1-split documents scan; no-op on a parallel scan
-    incrementalNearDupPairs(graft.util.Par.widen(Tables.documents(spark, dir)), 0.5)
+    incrementalNearDupPairs(Tables.documents(spark, dir), 0.5)
       .orderBy("a_id", "b_id")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

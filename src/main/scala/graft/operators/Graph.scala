@@ -258,14 +258,7 @@ object Graph {
     * through orders ⋈ lineitem, both directions. Top-100 by rank with a
     * full deterministic tie-break. */
   def g1PageRank(spark: SparkSession, dir: String): DataFrame = {
-    // widened scan (round-16 profile): the pair derivation — broadcast join
-    // + symmetrize explode + the adjacency groupBy's map-side collect_set —
-    // fuses into the lineitem SCAN stage, which at bench scale has 3 file
-    // splits (measured 0.8-1.5 s on 3 of 32 cores). The widen moves only
-    // the 2-column projection; at real scale the scan is already parallel
-    // and widen is a no-op (see graft.util.Par).
-    val li = graft.util.Par.widen(
-      Tables.lineitem(spark, dir).select("l_orderkey", "l_suppkey"))
+    val li = Tables.lineitem(spark, dir).select("l_orderkey", "l_suppkey")
     val ord = Tables.orders(spark, dir).select("o_orderkey", "o_custkey")
     // NO .distinct() on the pairs: pageRank's collect_set adjacency build
     // dedups map-side inside its one shuffle — a pre-dedup here would add a
@@ -293,10 +286,7 @@ object Graph {
     * vertices; the teleport mass addressed to them is dropped identically
     * in both engines (they still count in the seed normalizer). */
   def g1bPersonalized(spark: SparkSession, dir: String): DataFrame = {
-    // widened scan — same measured under-parallel fused stage as
-    // [[g1PageRank]] (the triple derivation + weighted-adjacency map side)
-    val li = graft.util.Par.widen(
-      Tables.lineitem(spark, dir).select("l_orderkey", "l_suppkey"))
+    val li = Tables.lineitem(spark, dir).select("l_orderkey", "l_suppkey")
     val ord = Tables.orders(spark, dir).select("o_orderkey", "o_custkey")
     // symmetrize the TRIPLES (not pre-weighted pairs) in the same one-pass
     // explode as [[g1PageRank]]; the distinct-order weighting happens
@@ -552,10 +542,7 @@ object Graph {
     * run. Hop cap 4; vertices further than that (or disconnected) are
     * absent by contract, identically in both engines. */
   def g3BfsHops(spark: SparkSession, dir: String): DataFrame = {
-    // widened scan — same measured under-parallel fused stage as
-    // [[g1PageRank]] (pair derivation + the adjacency groupBy's map side)
-    val li = graft.util.Par.widen(
-      Tables.lineitem(spark, dir).select("l_orderkey", "l_suppkey"))
+    val li = Tables.lineitem(spark, dir).select("l_orderkey", "l_suppkey")
     val ord = Tables.orders(spark, dir).select("o_orderkey", "o_custkey")
     // no pre-dedup — bfsHops' collect_set adjacency dedups in its one
     // shuffle (see [[g1PageRank]])
@@ -586,11 +573,8 @@ object Graph {
     * O(m^1.5) and O(m·d_max). The remaining local cost is constant-factor
     * (three ~1-40M-row shuffles), not algorithmic. */
   def g2Triangles(spark: SparkSession, dir: String): DataFrame = {
-    // widened scan (round-16 profile): the basket groupBy's map-side
-    // collect_set fuses into the 3-split lineitem scan (measured 1.5 s on
-    // 3 of 32 cores at sf0.1); no-op once the scan is naturally parallel
-    val li = graft.util.Par.widen(Tables.lineitem(spark, dir)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")))
+    val li = Tables.lineitem(spark, dir)
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
     // Per-order baskets via ONE orderkey shuffle (map-side partial sets),
     // pairs generated inside the array — the equivalent self-join shuffles
     // the lineitem projection twice and sort-merges 6M×6M before producing

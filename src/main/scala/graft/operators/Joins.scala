@@ -37,12 +37,7 @@ object Joins {
         concat(lit("Customer#"), lpad(col("o_custkey").cast("string"), 9, "0")))
       .when(col("o_orderkey") % 3 === 1, lpad(col("o_custkey").cast("string"), 7, "0"))
       .otherwise(concat(lit("UNKNOWN-"), col("o_orderkey").cast("string")))
-    // widened facts (round-16 profile): the exact-join materialization pass
-    // runs on the orders scan's single file split (a ~0.9 s one-task job at
-    // sf0.1); the widen moves only the 2-column projection and is a no-op
-    // once the fact scan is naturally parallel
-    val facts = graft.util.Par.widen(
-      Tables.orders(spark, dir).select(col("o_orderkey"), vendor.as("vendor")))
+    val facts = Tables.orders(spark, dir).select(col("o_orderkey"), vendor.as("vendor"))
     Enrichment.twoPhase(facts, Tables.customer(spark, dir),
         factId = "o_orderkey", factKey = "vendor",
         dimId = "c_custkey", dimKey = "c_name", payload = Seq("c_custkey", "c_mktsegment"))
@@ -70,10 +65,8 @@ object Joins {
         concat(lpad(col("o_custkey").cast("string"), 7, "0"),
           lit("*POS-"), (col("o_orderkey") % 97).cast("string")))
       .otherwise(concat(lit("UNKNOWN-"), col("o_orderkey").cast("string"), lit("*X")))
-    // widened facts — same measured single-task materialization pass as
-    // [[j02TwoPhaseEnrich]]; the normalization regexes then run 32-way too
-    val facts = graft.util.Par.widen(Tables.orders(spark, dir)
-        .select(col("o_orderkey"), messy.as("vendor")))
+    val facts = Tables.orders(spark, dir)
+      .select(col("o_orderkey"), messy.as("vendor"))
       .withColumn("vendor_norm", Enrichment.normalizeVendor(col("vendor")))
     val dim = Tables.customer(spark, dir)
       .withColumn("c_name_norm", Enrichment.normalizeVendor(col("c_name")))
@@ -311,12 +304,8 @@ object Joins {
       .filter(col("o_totalprice") > 450000.0)
       .select(col("o_orderkey"))
     val bloom = bloomBuild(hot, "o_orderkey")
-    // widened scan (round-16 profile): the md5-arithmetic bloom probe over
-    // every lineitem row fused into a single-task scan stage (measured
-    // 1.3 s on 1 of 32 cores at sf0.1); project to the 3 output columns
-    // FIRST so the widen exchange moves narrow rows. No-op at real scale.
-    graft.util.Par.widen(Tables.lineitem(spark, dir)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice")))
+    Tables.lineitem(spark, dir)
+      .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
       .filter(bloomMightContain(bloom, col("l_orderkey")))
       .join(hot.withColumnRenamed("o_orderkey", "l_orderkey"), Seq("l_orderkey"), "left_semi")
       .orderBy("l_orderkey", "l_linenumber")

@@ -302,11 +302,8 @@ object SetOpsWindows {
     // Re-quantize the scale-8 product sum to scale 4 BEFORE the prefix sum
     // (exact: 2-decimal inputs), so cum→double conversion stays exact —
     // the sumMoney convention, applied to the decimal carrier itself.
-    // widened scan (round-16 profile): the revenue aggregate's map side ran
-    // as a 0.8 s single-task job off the 1-split lineitem scan; the widen
-    // moves only the 3-column projection, no-op on a parallel scan
-    val rev = graft.util.Par.widen(Tables.lineitem(spark, dir)
-        .select("l_partkey", "l_extendedprice", "l_discount"))
+    val rev = Tables.lineitem(spark, dir)
+      .select("l_partkey", "l_extendedprice", "l_discount")
       .groupBy("l_partkey")
       .agg(sum(dec(col("l_extendedprice")) * dec(lit(1) - col("l_discount")))
         .cast(DecimalType(38, 4)).as("rev"))

@@ -33,13 +33,12 @@ object TextAnalysis {
 
   /** Distinct (id, shingle) pairs with the token array materialized behind a
     * projection boundary, so the tokenizing split runs once per document.
-    * NOT widened here (round-16 A/B, two interleaved passes each way): a
-    * blanket [[graft.util.Par.widen]] on every shingle consumer was net
-    * NEGATIVE (+2.16 s over the family) — multi-stage/iterative consumers
-    * (prefix variants, cluster loops) pay per-stage task overhead on the
-    * widened partitioning at bench scale. Only the two naive inverted
-    * self-joins, whose single Σdf² stage dominates, widen at their call
-    * sites (measured −1.23 s d2, −0.70 s d11). */
+    * NOT widened here (round-16 A/B, two interleaved passes each way):
+    * widening every shingle consumer was net NEGATIVE (+2.16 s over the
+    * family) — multi-stage/iterative consumers (prefix variants, cluster
+    * loops) pay per-stage task overhead on the widened partitioning at
+    * bench scale. Only the dedup consumers whose single Σdf² self-join
+    * stage dominates widen, through `Dedup.spread`. */
   def shingleRows(docs: org.apache.spark.sql.DataFrame, idCol: String = "doc_id",
                   textCol: String = "text"): org.apache.spark.sql.DataFrame =
     docs.select(col(idCol), tokens(col(textCol)).as("__toks"))
@@ -188,13 +187,8 @@ object TextAnalysis {
     * avoided (libm vs java.lang.Math diverge at ulp level). */
   def lmScore(spark: SparkSession, dir: String): DataFrame = {
     val t = tokens(lower(trim(col("text"))))
-    // widened input (round-16 profile): the bigram explode + model build
-    // ran as two ~0.64 s low-parallelism jobs off the 1-split documents
-    // scan (t22); widen BEFORE the tokenize so the CPU spreads. Lazy plan
-    // only — t14's bench action prunes the scored subtree and must keep
-    // paying nothing (the d6 lesson). No-op on a parallel scan.
     val docBigrams = graft.util.Caches.materialize(
-      graft.util.Par.widen(Tables.documents(spark, dir))
+      Tables.documents(spark, dir)
         .select(col("doc_id"), t.as("t"))
         .select(col("doc_id"), explode(zip_with(
           slice(col("t"), lit(1), size(col("t")) - 1),

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 import graft.operators.SetOpsWindows
 
@@ -14,6 +16,22 @@ class PlanSpec extends SparkSpec {
   def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
   def planOf(name: String): String = plan(SparkEntry.queries(name)(spark, sf0001))
+
+  /** Every physical node of `df`'s plan, through adaptive wrappers and
+    * query stages, and into each cached relation's plan once (the plan
+    * string prints a cached subtree once per consumer). */
+  def planNodes(df: DataFrame): Seq[SparkPlan] = {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[AnyRef]
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case s: InMemoryTableScanExec =>
+        val b = s.relation.cacheBuilder
+        if (seen.exists(_ eq b)) Nil else { seen += b; walk(b.cachedPlan) }
+      case _ => p.children.flatMap(walk)
+    })
+    walk(df.queryExecution.executedPlan)
+  }
 
   test("filters push down to the parquet scan and prune columns") {
     val p = planOf("f01_contains_filter")
@@ -724,5 +742,26 @@ class PlanSpec extends SparkSpec {
     val p = plan(adj)
     assert("Exchange hashpartitioning".r.findAllIn(p).size === 1,
       s"weighted-adjacency chain should run on the one hash(src) exchange:\n$p")
+  }
+
+  /** The engine widens a scan in one place, `Dedup.spread`, and only for
+    * its shingle builds. j02, j07, a25, g2 and t22 also read one-split
+    * tables but must plan no round-robin exchange; d2 plans exactly one,
+    * inside its cached shingle frame, whenever there is more than one
+    * core to spread over (the sf0.001 documents table scans as one split). */
+  test("scan widening happens only in dedup's shingle builds") {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    spark.catalog.clearCache()
+    def widens(name: String): Int =
+      planNodes(SparkEntry.queries(name)(spark, sf0001)).count {
+        case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+        case _ => false
+      }
+    for (name <- Seq("j02_twophase_enrich", "j07_bloom_semi", "a25_abc_pareto",
+                     "g2_triangles", "t22_ccnet_buckets"))
+      assert(widens(name) === 0, s"$name plans a round-robin widen")
+    if (spark.sparkContext.defaultParallelism > 1)
+      assert(widens("d2_ngram_jaccard") === 1)
   }
 }

@@ -46,7 +46,7 @@ def run_anchor(out, sf_dir, reps):
         sqls = json.load(f)
     assert sorted(sqls) == sorted(ANCHORS), sorted(sqls)
     # engine side: Bench's own min-over-retries on the anchor set
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="32")
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
     proc = subprocess.run(
         ["sbt", "-batch", f"runMain graft.Bench {','.join(ANCHORS)}"],
         capture_output=True, text=True, env=env,
