@@ -60,22 +60,11 @@ object GraftSession {
       // enough to run the disk out under a legitimately-spilling query.
       // 5 minutes bounds the dead-file window at a negligible GC cost.
       .config("spark.cleaner.periodicGC.interval", "5min")
-      // Shuffle/spill codec, overridable per DATA TIER like the partition
-      // count above. Default lz4 (Spark's own default — cheapest CPU, the
-      // right trade everywhere compute dominates). The override exists for
-      // disk-bound corpus-scaled exchanges: zstd compresses the sorted
-      // integer-key shuffle runs of a graph adjacency build ~2x tighter
-      // than lz4, which is the difference between fitting and ENOSPC when
-      // a single node hosts the whole corpus's shuffle (measured: g1b at
-      // sf100 spills past this box's ~60 GB scratch under lz4). On a real
-      // cluster the same knob trades executor CPU for disk/network bytes —
-      // a per-tier call, not a global one, hence env-routed not hardcoded.
-      .config("spark.io.compression.codec",
-        sys.env.get("SPARK_GRAFT_IO_CODEC").map { s =>
-          require(Set("lz4", "zstd", "snappy", "lzf").contains(s.trim),
-            s"SPARK_GRAFT_IO_CODEC must be one of lz4/zstd/snappy/lzf, got '$s'")
-          s.trim
-        }.getOrElse("lz4"))
+      // Shuffle/spill codec: Spark's own default (lz4), set so the session
+      // conf reports it (Bench and perfbench record it as provenance); a
+      // `-Dspark.io.compression.codec=…` JVM option (through
+      // SPARK_GRAFT_EXTRA_JVM) still takes effect.
+      .config("spark.io.compression.codec", sys.props.getOrElse("spark.io.compression.codec", "lz4"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // events.parquet stores TIMESTAMP(NANOS); read as Long and convert

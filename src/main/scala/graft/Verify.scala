@@ -29,6 +29,7 @@ object Verify {
       Files.writeString(Paths.get(s"$outDir/attempted.json"),
         attempted.keys.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]"))
     attempted.foreach { case (name, fn) =>
+      System.err.println(s"[verify] start $name")
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
