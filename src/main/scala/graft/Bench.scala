@@ -234,17 +234,16 @@ object Bench {
     val failed = best.collect { case (k, (_, m, _)) if !m.ok => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = best.values.collect { case (_, m, _) if m.ok => m.seconds }.sum
-    // Self-documenting harness provenance (round-13 advice): tier-sized
-    // runs (SPARK_GRAFT_SHUFFLE_PARTITIONS=256, SPARK_DRIVER_MEM=32g for
-    // sf100 documents/lineitem) produce numbers that are NOT comparable to
-    // default-harness rows of the same query — record the effective values
-    // in the JSON so the distinction is machine-readable, not a README
-    // footnote. max_heap_mb is the JVM's real -Xmx-derived ceiling (the
-    // truthful form of SPARK_DRIVER_MEM, which may be unset); cpus is the
-    // session's default parallelism (the truthful form of SPARK_GRAFT_CPUS).
-    // the conf value is only guaranteed numeric when set via the validated
-    // env var — interpolating any other source unquoted could emit invalid
-    // JSON; parse to Int, else emit it as an escaped JSON string
+    // Self-documenting harness provenance (round-13 advice): runs with a
+    // different heap or core count produce numbers that are NOT comparable
+    // to default-harness rows of the same query — record the effective
+    // values in the JSON so the distinction is machine-readable, not a
+    // README footnote. max_heap_mb is the JVM's real -Xmx-derived ceiling
+    // (the truthful form of SPARK_DRIVER_MEM, which may be unset); cpus is
+    // the session's default parallelism (the truthful form of
+    // SPARK_GRAFT_CPUS). The shuffle-partition conf is the unvalidated
+    // SPARK_GRAFT_CPUS string — interpolating it unquoted could emit
+    // invalid JSON; parse to Int, else emit it as an escaped JSON string
     val shufParts = {
       val raw = spark.conf.get("spark.sql.shuffle.partitions")
       scala.util.Try(raw.trim.toInt).map(_.toString).getOrElse(graft.util.Json.str(raw))

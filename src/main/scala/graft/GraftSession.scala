@@ -17,22 +17,10 @@ object GraftSession {
       .master(master)
       .appName("graft")
       .withExtensions(new graft.plans.GraftExtensions)
-      // Partition-count discipline: defaults to the core count (the
-      // local-mode analog of "≈ total cluster cores"), overridable per
-      // DATA TIER — shuffle partitions must grow with the data so each
-      // partition stays executor-memory-sized (at sf100, 600M lineitem
-      // rows over 32 partitions is ~19M rows/task and a measured task
-      // heap OOM; a 1000-executor cluster at that scale runs thousands
-      // of partitions). AQE coalesces excess partitions at runtime, so
-      // oversizing is cheap; undersizing is not recoverable.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map { s =>
-          // fail fast with the variable NAMED — a malformed value passed
-          // raw would surface as an opaque Spark config error mid-job
-          require(scala.util.Try(s.trim.toInt).toOption.exists(_ > 0),
-            s"SPARK_GRAFT_SHUFFLE_PARTITIONS must be a positive integer, got '$s'")
-          s.trim
-        }.getOrElse(cpus))
+      // Partition-count discipline: the core count (the local-mode analog
+      // of "≈ total cluster cores"); AQE coalesces excess partitions at
+      // runtime.
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       // Let AQE convert shuffle joins to broadcast from RUNTIME-MEASURED
       // sizes up to 64 MB (default 10 MB). This is the scale-safe way to

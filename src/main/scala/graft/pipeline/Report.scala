@@ -7,11 +7,10 @@ import graft.operators.Enrichment
 
 /** Report assembly + sink (excel_builder.py:17-181, K1/P4/P5/K3).
   *
-  * The reference writes a styled .xlsx with dropdown validation; no POI or
-  * spark-excel jar ships in this environment, so the engine-native sink is a
-  * single-file CSV with the exact report column contract (the styling /
-  * dropdown layer is presentation, SURVEY.md §7.3, and attaches to this
-  * same frame via any xlsx writer when one is on the classpath). */
+  * The reference writes a styled .xlsx with dropdown validation. The same
+  * frame goes to two sinks: [[writeCsv]], a single-file CSV with the exact
+  * report column contract, and [[ExcelSink]] in this package, the styled
+  * workbook whose dropdown lists take the values of [[dropdownValues]]. */
 object Report {
 
   /** P4: transaction → report projection — rename/reorder to the 10 report

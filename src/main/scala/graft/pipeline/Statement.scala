@@ -1,140 +1,82 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+
+import graft.sources.Pdf
 
 /** The reference's statement-parsing dataflow (pdf_parser.py:90-395),
-  * re-expressed as one lazy Catalyst plan over a positional word table
+  * re-expressed over a positional word table
   * `(file, page, text, x0, x1, top, bottom)` — the output of any PDF word
-  * extractor (FIXTURES.md A1). Every stage is a pure DataFrame → DataFrame
-  * function; nothing materializes until the caller acts.
-  *
-  * Scale: everything below is partitioned by (file, page) — millions of
-  * statements parallelize perfectly; the only shuffles are the per-page
-  * window/groupBy stages, all on the same (file, page) key, which Spark
-  * reuses across stages (one exchange).
+  * extractor (FIXTURES.md A1). Like the reference's per-page loop, it makes
+  * one pass per page: a single `groupByKey((file, page))` fold
+  * ([[pageRows]]) computes the page predicate, the header row and the
+  * credit threshold from the page's words and clusters the words below the
+  * header into rows; a row-level Catalyst projection ([[parseRows]]) then
+  * turns rows into transactions. The plan is lazy, scans `words` once and
+  * shuffles once, on (file, page), so pages parallelize freely.
   */
 object Statement {
 
   val mmdd = "^\\d{2}/\\d{2}$"
   val amountShape = "^[\\d,]+\\.\\d{2}$"
 
-  /** F1: keep only pages whose text mentions "Transaction Details"
-    * (pdf_parser.py:108-110) — the cheap page predicate that prunes whole
-    * pages before any row parsing. */
-  def detailPages(words: DataFrame): DataFrame = {
-    val pageText = words.groupBy("file", "page")
-      .agg(concat_ws(" ",
-        transform(array_sort(collect_list(struct(col("top"), col("x0"), col("text")))),
-          w => w.getField("text"))).as("page_text"))
-      .filter(col("page_text").contains("Transaction Details"))
-      .select("file", "page")
-    words.join(pageText, Seq("file", "page"), "left_semi")
-  }
+  case class PageWord(file: String, page: Int, text: String,
+                      x0: Double, x1: Double, top: Double)
+  case class RowWord(x0: Double, text: String, x1: Double)
+  case class PageRow(file: String, page: Int, row_id: Long, ws: Seq[RowWord],
+                     column_threshold: Double)
 
-  /** J4+A3: per-page credit/charge column threshold — the `Credits`/`Charges`
-    * header words on the same line (|Δtop| < 2, charges right of credits);
-    * threshold = midpoint of their right edges (pdf_parser.py:137-146,
-    * 195-203). A band self-join confined to header words. */
-  def pageThresholds(words: DataFrame): DataFrame = {
-    val cred = words.filter(col("text") === "Credits")
-      .select(col("file"), col("page"), col("x1").as("cred_x1"), col("top").as("cred_top"))
-    val chg = words.filter(col("text") === "Charges")
-      .select(col("file").as("f2"), col("page").as("p2"), col("x1").as("chg_x1"),
-        col("top").as("chg_top"))
-    cred.join(chg,
-        col("file") === col("f2") && col("page") === col("p2") &&
-        abs(col("cred_top") - col("chg_top")) < 2 && col("chg_x1") > col("cred_x1"))
-      .groupBy("file", "page")
-      // reference takes the first pair in word-scan order (pdf_parser.py:
-      // 137-146); min(struct) = topmost-leftmost pair, deterministically
-      .agg(min(struct(col("cred_top"), col("cred_x1"), col("chg_x1"))).as("m"))
-      .select(col("file"), col("page"),
-        ((col("m.cred_x1") + col("m.chg_x1")) / 2).as("column_threshold"))
-  }
-
-  /** J5+A4: per-page header row — the first `Trans` word confirmed by `Post`
-    * and `Reference` on the same line (pdf_parser.py:205-226). */
-  def pageHeaderTops(words: DataFrame): DataFrame = {
-    val trans = words.filter(col("text") === "Trans")
-      .select(col("file"), col("page"), col("top").as("t_top"))
-    val post = words.filter(col("text") === "Post")
-      .select(col("file").as("f2"), col("page").as("p2"), col("top").as("p_top"))
-    val ref = words.filter(col("text") === "Reference")
-      .select(col("file").as("f3"), col("page").as("p3"), col("top").as("r_top"))
-    trans
-      .join(post, col("file") === col("f2") && col("page") === col("p2") &&
-        abs(col("t_top") - col("p_top")) < 2)
-      .join(ref, col("file") === col("f3") && col("page") === col("p3") &&
-        abs(col("t_top") - col("r_top")) < 2)
-      .groupBy("file", "page").agg(min("t_top").as("header_top"))
-  }
-
-  case class ClusterWord(file: String, page: Int, text: String,
-                         x0: Double, x1: Double, top: Double)
-  case class ClusteredRow(file: String, page: Int, row_id: Long,
-                          ws: Seq[(Double, String, Double)], row_top: Double)
-
-  /** A1: spatial row clustering — sort words by (top, x0) within a page; a
-    * word joins the current row while `|top − anchor| < 3` where the anchor
-    * is the **row's first word** (pdf_parser.py:267-276: `current_top` is
-    * set when a row opens and never updated). Anchor semantics are NOT
-    * expressible as a lag window — a lag formulation lets slow vertical
-    * drift chain-merge rows the reference splits — so this is a per-page
-    * greedy fold (`flatMapGroups`), which still parallelizes perfectly:
-    * one task per hash bucket of pages, bounded words per page. */
-  def clusterRows(words: DataFrame): DataFrame = {
-    val spark = words.sparkSession
-    import spark.implicits._
-    words.select(col("file"), col("page").cast("int").as("page"), col("text"),
-        col("x0").cast("double"), col("x1").cast("double"), col("top").cast("double"))
-      // a real word extractor always provides text+coords; defensively drop
-      // incomplete words rather than crash the typed encoder on nulls
-      .na.drop(Seq("file", "page", "text", "x0", "x1", "top"))
-      .as[ClusterWord]
-      .groupByKey(w => (w.file, w.page))
-      .flatMapGroups { (key: (String, Int), it: Iterator[ClusterWord]) =>
-        val (file, page) = key
-        val ws = it.toArray.sortBy(w => (w.top, w.x0))
-        val rows = Seq.newBuilder[ClusteredRow]
-        var rowId = 1L
-        var start = 0
-        var anchor = if (ws.nonEmpty) ws(0).top else 0.0
-        def emit(endExclusive: Int): Unit = {
-          val row = ws.slice(start, endExclusive)
-          // rows inherit the page's (top, x0) sort — the reference never
-          // re-sorts within a row (pdf_parser.py:264 sorts once, rows are
-          // scan-order slices), and _parse_row's positional logic consumes
-          // THAT order; an x0 re-sort would accept rows the reference
-          // rejects when jitter puts a word slightly above the dates
-          rows += ClusteredRow(file, page, rowId,
-            row.map(w => (w.x0, w.text, w.x1)).toSeq,
-            row.map(_.top).min)
-        }
-        var i = 1
-        while (i < ws.length) {
-          if (math.abs(ws(i).top - anchor) >= 3) {
-            emit(i); rowId += 1; start = i; anchor = ws(i).top
-          }
-          i += 1
-        }
-        if (ws.nonEmpty) emit(ws.length)
-        rows.result()
+  /** One page's rows, from all of its words:
+    *  - F1: the page's text, its words in (top, x0, text) order, must
+    *    mention "Transaction Details" (pdf_parser.py:108-110);
+    *  - J5+A4: the header top is the topmost `Trans` word with a `Post` and
+    *    a `Reference` on the same line, |Δtop| < 2 (pdf_parser.py:205-226);
+    *  - J4+A3: the credit/charge column threshold is the midpoint of the
+    *    right edges of a `Credits`/`Charges` pair on the same line, charges
+    *    right of credits (pdf_parser.py:137-146, 195-203). The reference
+    *    takes the first pair in word-scan order; the minimum
+    *    (cred_top, cred_x1, chg_x1) is the topmost-leftmost pair,
+    *    deterministically;
+    *  - F10: only words below `header_top + 5` are clustered
+    *    (pdf_parser.py:259-260);
+    *  - A1: rows are [[Pdf.anchorRows]] of those words in the same order
+    *    (a (top, x0) tie falls to the text, so rows do not depend on the
+    *    order words arrive in) with tolerance 3 (pdf_parser.py:267-276).
+    *    Rows keep that order: the reference never re-sorts within a row,
+    *    and `_parse_row`'s positional logic consumes it, so a word jittered
+    *    slightly above the dates becomes words[0] and the row is rejected,
+    *    as the reference does.
+    * A page without detail text, header or threshold yields no rows. */
+  def pageRows(file: String, page: Int, words: Seq[PageWord]): Seq[PageRow] = {
+    def named(text: String) = words.filter(_.text == text)
+    def sameLine(a: PageWord, b: PageWord) = math.abs(a.top - b.top) < 2
+    val sorted = words.sortBy(w => (w.top, w.x0, w.text))
+    val detail = sorted.map(_.text).mkString(" ").contains("Transaction Details")
+    val headerTops = named("Trans")
+      .filter(t => named("Post").exists(sameLine(t, _)) && named("Reference").exists(sameLine(t, _)))
+      .map(_.top)
+    val pairs = for (cred <- named("Credits"); chg <- named("Charges")
+                     if sameLine(cred, chg) && chg.x1 > cred.x1) yield (cred.top, cred.x1, chg.x1)
+    if (!detail || headerTops.isEmpty || pairs.isEmpty) Nil
+    else {
+      val (_, credX1, chgX1) = pairs.min
+      val body = sorted.filter(_.top > headerTops.min + 5)
+      Pdf.anchorRows(body, (w: PageWord) => w.top, 3.0).zipWithIndex.map { case (row, i) =>
+        PageRow(file, page, i + 1L, row.map(w => RowWord(w.x0, w.text, w.x1)), (credX1 + chgX1) / 2)
       }
-      .toDF("file", "page", "row_id", "ws", "row_top")
-      .withColumn("ws", col("ws").cast(
-        "array<struct<x0:double,text:string,x1:double>>"))
+    }
   }
 
   /** P1/F2-F6/W1/P2/P3/A2: clustered row → transaction projection
-    * (pdf_parser.py:283-395). `ws` is the x0-sorted word array:
+    * (pdf_parser.py:283-395) over [[PageRow]]s. `ws` is the row's words in
+    * the page's (top, x0, text) order:
     *  - arity ≥ 4 (F2), words[0] and words[1] shaped MM/DD (F3);
     *  - rightmost amount-shaped word = amount (W1, right-to-left argmax);
     *  - vendor/description = words[3..amountIdx) joined (P1/A2);
     *  - drop "PAYMENT THANK YOU" rows (F5) and descriptions < 3 chars (F6);
     *  - strip $/, and cast (P2); negate credits left of the threshold (P3). */
-  def parseRows(rows: DataFrame, thresholds: DataFrame): DataFrame = {
+  def parseRows(rows: DataFrame): DataFrame = {
     val texts = transform(col("ws"), w => w.getField("text"))
     val n = size(col("ws"))
     // W1: rightmost index (1-based) whose text is amount-shaped, scanning
@@ -150,7 +92,6 @@ object Statement {
     ).otherwise(lit(0))
 
     rows
-      .join(thresholds, Seq("file", "page"), "inner")
       .filter(n >= 4)                                  // F2
       .filter(element_at(texts, 1).rlike(mmdd) && element_at(texts, 2).rlike(mmdd)) // F3
       .withColumn("amt_idx", amtIdx)
@@ -194,14 +135,20 @@ object Statement {
     txns
   }
 
-  /** The full pipeline: words → transactions (one lazy plan, §3.1).
-    * The header-buffer filter (F10, pdf_parser.py:259-260) drops words at or
-    * above `header_top + 5` *before* clustering, like the reference. */
+  /** The full pipeline: words → transactions (one lazy plan, §3.1). Words
+    * with a null field are dropped before the fold; [[graft.sources.Ingest]]'s
+    * `WordExtractor` tuple cannot produce a null coordinate. */
   def parse(words: DataFrame): DataFrame = {
-    val pages = detailPages(words)
-    val dataWords = pages.join(pageHeaderTops(pages), Seq("file", "page"))
-      .filter(col("top") > col("header_top") + 5)
-      .drop("header_top")
-    parseRows(clusterRows(dataWords), pageThresholds(pages))
+    val spark = words.sparkSession
+    import spark.implicits._
+    parseRows(words.select(col("file"), col("page").cast("int").as("page"), col("text"),
+        col("x0").cast("double"), col("x1").cast("double"), col("top").cast("double"))
+      .na.drop()
+      .as[PageWord]
+      .groupByKey(w => (w.file, w.page))
+      .flatMapGroups { (key: (String, Int), it: Iterator[PageWord]) =>
+        pageRows(key._1, key._2, it.toVector)
+      }
+      .toDF())
   }
 }

@@ -1287,10 +1287,28 @@ object Pdf {
       .sortBy(w => (w.top, w.x0))
   }
 
+  /** Anchor-rule row clustering (`pdf_parser.py:267-276`) over words sorted
+    * by (top, x0): a word joins the open row while `|top − anchor| < tol`,
+    * where the anchor is the top of the row's FIRST word and never moves.
+    * A lag-to-previous-word rule would let slow vertical drift chain-merge
+    * rows the reference splits. Rows keep the input order. */
+  def anchorRows[W](sorted: Seq[W], top: W => Double, tol: Double): Vector[Vector[W]] = {
+    val rows = Vector.newBuilder[Vector[W]]
+    var row = Vector.empty[W]
+    sorted.foreach { w =>
+      if (row.nonEmpty && math.abs(top(w) - top(row.head)) >= tol) {
+        rows += row; row = Vector.empty
+      }
+      row :+= w
+    }
+    if (row.nonEmpty) rows += row
+    rows.result()
+  }
+
   /** Ragged cell grids from positioned words — the S3 surface
     * (`pdf_parser.py:419-434` `page.extract_tables()`), via the text-based
-    * strategy: rows are word clusters within `rowTol` of their anchor top
-    * (the Statement pipeline's clustering rule), columns are the gaps in
+    * strategy: rows are [[anchorRows]] with tolerance `rowTol` (the
+    * Statement pipeline's clustering rule), columns are the gaps in
     * the page-wide x0 profile (a new column starts where the nearest
     * smaller x0 is ≥ `colGap` away), and a vertical gap ≥ `tableGap`
     * between consecutive rows starts a new table. Words sharing a
@@ -1301,21 +1319,12 @@ object Pdf {
                     colGap: Double = 18.0, tableGap: Double = 40.0): Seq[(Int, Int, Vector[Vector[String]])] = {
     case class Phrase(x0: Double, x1: Double, text: String)
     extractWords(content).groupBy(_.page).toSeq.sortBy(_._1).flatMap { case (page, ws) =>
-      // anchor-rule row clustering on top
-      val sorted = ws.sortBy(w => (w.top, w.x0))
-      case class RowAcc(anchor: Double, words: Vector[Word])
-      val rows = sorted.foldLeft(Vector.empty[RowAcc]) { (acc, w) =>
-        acc.lastOption match {
-          case Some(r) if w.top - r.anchor < rowTol =>
-            acc.init :+ r.copy(words = r.words :+ w)
-          case _ => acc :+ RowAcc(w.top, Vector(w))
-        }
-      }
+      val rows = anchorRows(ws.sortBy(w => (w.top, w.x0)), (w: Word) => w.top, rowTol)
       // merge adjacent words into PHRASES (multi-word cell text: a gap of
       // about one space stays inside a cell), so the column profile sees
       // cell starts, not every word
-      def phrases(r: RowAcc): Vector[Phrase] =
-        r.words.sortBy(_.x0).foldLeft(Vector.empty[Phrase]) { (acc, w) =>
+      def phrases(row: Seq[Word]): Vector[Phrase] =
+        row.sortBy(_.x0).foldLeft(Vector.empty[Phrase]) { (acc, w) =>
           val em = (w.bottom - w.top).max(1.0)
           acc.lastOption match {
             case Some(p) if w.x0 - p.x1 <= 1.0 * em =>
@@ -1323,7 +1332,7 @@ object Pdf {
             case _ => acc :+ Phrase(w.x0, w.x1, w.text)
           }
         }
-      val phrased = rows.map(r => (r.anchor, phrases(r)))
+      val phrased = rows.map(r => (r.head.top, phrases(r)))
       // column boundaries from the page-wide phrase-start profile
       val xs = phrased.flatMap(_._2.map(_.x0)).distinct.sorted
       val bounds = xs.foldLeft(Vector.empty[Double]) { (acc, x) =>

@@ -97,10 +97,10 @@ object PureProperties extends Properties("pure") {
   }
 }
 
-/** Spark-backed properties: the clustering window formulation is exactly the
-  * reference's greedy rule on arbitrary jittered layouts. */
-class ClusteringPropertySpec extends SparkSpec {
-  import spark.implicits._
+/** Row clustering ([[graft.sources.Pdf.anchorRows]], which the Statement
+  * fold and `Pdf.extractTables` share) is exactly the reference's greedy
+  * rule on arbitrary jittered layouts. A pure function: full volume. */
+class ClusteringPropertySpec extends org.scalatest.funsuite.AnyFunSuite {
   import org.scalacheck.Prop.propBoolean
 
   /** pdf_parser.py:267-276 verbatim: the anchor is the row's FIRST word and
@@ -119,19 +119,14 @@ class ClusteringPropertySpec extends SparkSpec {
       Gen.listOfN(n, Gen.chooseNum(0.0, 300.0).map(t => math.rint(t * 10) / 10)))
     val prop = forAll(genTops) { tops =>
       tops.nonEmpty ==> {
-        val df = tops.zipWithIndex.map { case (t, i) =>
-          ("f", 1, s"w$i", i * 5.0, i * 5.0 + 4, t, t + 8.0)
-        }.toDF("file", "page", "text", "x0", "x1", "top", "bottom")
-        val rows = graft.pipeline.Statement.clusterRows(df)
-          .select("row_id", "ws").collect()
-        val gotSizes = rows.map(r => r.getLong(0) -> r.getSeq[Any](1).size)
-          .sortBy(_._1).map(_._2).toList
+        val gotSizes = graft.sources.Pdf.anchorRows(tops.sorted, identity[Double], 3.0)
+          .map(_.size).toList
         val ref = greedyReference(tops)
         val refSizes = ref.groupBy(identity).toList.sortBy(_._1).map(_._2.size)
         Prop(gotSizes == refSizes) :| s"got $gotSizes want $refSizes tops=$tops"
       }
     }
-    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(15), prop)
+    val result = Test.check(Test.Parameters.default, prop)
     assert(result.passed, result.status.toString)
   }
 }

@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Statement pipeline golden test on the FIXTURES.md A1 word table, plus the
-  * clustering-equivalence property (window formulation ≡ reference's greedy
-  * sequential rule, SURVEY.md §7.4). */
+  * row clustering ([[graft.sources.Pdf.anchorRows]]) checked against the
+  * reference's greedy anchor rule (SURVEY.md §7.4). */
 object StatementSpec {
   case class W(file: String, page: Int, text: String, x0: Double, x1: Double,
                top: Double, bottom: Double)
@@ -120,11 +120,9 @@ class StatementSpec extends SparkSpec {
         row
       }
     }
-    val got = Statement.clusterRows(ws.toDF())
-      .orderBy("row_id").collect()
-      .flatMap(r => r.getSeq[org.apache.spark.sql.Row](3).map(_ => r.getLong(2)))
-    assert(got.length === tops.length)
-    val gotSizes = got.groupBy(identity).toSeq.sortBy(_._1).map(_._2.length)
+    val gotSizes = graft.sources.Pdf.anchorRows(ws.sortBy(w => (w.top, w.x0)), (w: W) => w.top, 3.0)
+      .map(_.length)
+    assert(gotSizes.sum === tops.length)
     val wantSizes = expected.groupBy(identity).toSeq.sortBy(_._1).map(_._2.length)
     assert(gotSizes === wantSizes)
     assert(wantSizes.take(2) === Seq(2, 1)) // the drift case actually splits

@@ -620,15 +620,15 @@ class PdfSpec extends SparkSpec {
       ("gl", "62000", "Rent")))
   }
 
-  test("full reference dataflow: rendered statement PDF -> extractor -> Statement.parse") {
-    // A statement laid out with one absolutely-positioned Tj per word
-    // (Courier 10pt: 6.0pt/glyph, so every x0/x1/top is hand-computable),
-    // replaying the FIXTURES.md A1 semantics as an actual PDF: header
-    // words, the Credits/Charges threshold pair, a charge row, a credit
-    // row (amount left of threshold), a PAYMENT row (F5-dropped), and a
-    // dateless footer (F3-rejected).
+  /** A statement laid out with one absolutely-positioned Tj per word
+    * (Courier 10pt: 6.0pt/glyph, so every x0/x1/top is hand-computable),
+    * replaying the FIXTURES.md A1 semantics as an actual PDF: header
+    * words, the Credits/Charges threshold pair, a charge row, a credit
+    * row (amount left of threshold), a PAYMENT row (F5-dropped), and a
+    * dateless footer (F3-rejected). */
+  val renderedStatement: String = {
     def at(x: Int, y: Int, t: String) = s"BT /F1 10 Tf $x $y Td ($t) Tj ET"
-    val cs = Seq(
+    Seq(
       at(50, 600, "Transaction"), at(122, 600, "Details"),
       at(465, 570, "Credits"), at(540, 570, "Charges"), // x1: 507 / 582 -> thr 544.5
       at(40, 555, "Trans"), at(80, 555, "Post"), at(115, 555, "Reference"),
@@ -641,7 +641,10 @@ class PdfSpec extends SparkSpec {
       at(545, 510, "500.00"),
       at(40, 495, "Subtotal"), at(545, 495, "1,788.68")
     ).mkString("\n")
-    val words = Pdf.extractWords(mkPdf(Seq(cs), compress = true))
+  }
+
+  test("full reference dataflow: rendered statement PDF -> extractor -> Statement.parse") {
+    val words = Pdf.extractWords(mkPdf(Seq(renderedStatement), compress = true))
     import spark.implicits._
     val table = words.map(w => ("stmt.pdf", w.page, w.text, w.x0, w.x1, w.top, w.bottom))
       .toDF("file", "page", "text", "x0", "x1", "top", "bottom")
@@ -657,13 +660,52 @@ class PdfSpec extends SparkSpec {
     // the round-12 done criterion for the decryption capability
     for (mode <- Seq("rc4-128", "aes-128")) {
       val encWords = Pdf.extractWords(
-        TestPdfCrypt.encryptPdf(mkPdf(Seq(cs), compress = true), mode))
+        TestPdfCrypt.encryptPdf(mkPdf(Seq(renderedStatement), compress = true), mode))
       val encTable = encWords.map(w => ("stmt.pdf", w.page, w.text, w.x0, w.x1, w.top, w.bottom))
         .toDF("file", "page", "text", "x0", "x1", "top", "bottom")
       val encTxns = graft.pipeline.Statement.parse(encTable).collect()
         .map(r => (r.getAs[String]("date"), r.getAs[String]("vendor"),
           r.getAs[java.math.BigDecimal]("amount").doubleValue())).toSet
       assert(encTxns === txns, mode)
+    }
+  }
+
+  test("Statement.parse over scanned PDFs decodes each file once and shuffles once") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def shuffles(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case q: QueryStageExec => shuffles(q.plan)
+      case e: ShuffleExchangeExec => 1 + shuffles(e.child)
+      case other => other.children.map(shuffles).sum
+    }
+    val n = 3
+    val dir = java.nio.file.Files.createTempDirectory("pdfspec-parse").toFile
+    try {
+      // page 2 has no "Transaction Details": F1 drops it
+      for (i <- 0 until n)
+        java.nio.file.Files.write(new java.io.File(dir, s"s$i.pdf").toPath,
+          mkPdf(Seq(renderedStatement, statementPage1), compress = true))
+      val decodes = spark.sparkContext.longAccumulator("decodes")
+      val counting: Ingest.WordExtractor = (path, content) => {
+        decodes.add(1)
+        Ingest.defaultExtractor(path, content)
+      }
+      val txns = graft.pipeline.Statement.parse(
+        Ingest.extractWords(Ingest.binaryScan(spark, dir.getAbsolutePath), counting))
+      val got = txns.collect().toSeq
+        .map(r => (r.getAs[String]("file").split('/').last, r.getAs[String]("date"),
+          r.getAs[String]("vendor"), r.getAs[java.math.BigDecimal]("amount").doubleValue()))
+        .sorted
+      assert(decodes.value === n)
+      assert(shuffles(txns.queryExecution.executedPlan) === 1,
+        txns.queryExecution.executedPlan.toString)
+      assert(got === (0 until n).flatMap(i => Seq(
+        (s"s$i.pdf", "01/03", "AMAZON MKTPL", 39.12),
+        (s"s$i.pdf", "01/05", "REFUND VENDOR", -15.0))).sorted)
+    } finally {
+      dir.listFiles().foreach(_.delete()); dir.delete()
     }
   }
 }
