@@ -37,7 +37,10 @@ object Verify {
       }
       finally graft.util.Caches.releaseAll()
     }
+    // a targeted run declares only its own queries' oracles, so the gate
+    // reports just those instead of failing every query it skipped
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

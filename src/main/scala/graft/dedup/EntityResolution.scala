@@ -17,11 +17,11 @@ import graft.Tables
   *
   * Scale shape: every stage is already individually scale-audited — the
   * pair stage never goes n² (q-gram blocking + length bound), the closure
-  * is the iterative min-label propagation (diameter-bounded, near-dup
-  * graphs are cliques-with-chips), and the election is one window over the
-  * cluster key. Singleton names (no fuzzy neighbor) skip the closure
-  * entirely — they join back as their own cluster, so the component stage
-  * only ever sees the pair graph, not the corpus.
+  * is large-star/small-star (rounds logarithmic in the pair graph's size),
+  * and the election is one window over the cluster key. Singleton names
+  * (no fuzzy neighbor) skip the closure entirely — they join back as their
+  * own cluster, so the component stage only ever sees the pair graph, not
+  * the corpus.
   *
   * Ref: generalizes the reference's exact vendor-name upsert
   * (database.py:109-114 exact-then-LIKE lookup) to transitive fuzzy
@@ -42,7 +42,7 @@ object EntityResolution {
     val pairs = graft.operators.Joins
       .fuzzyNamePairs(names.select("name"), 2)
       .select(col("a_name").as("a_id"), col("b_name").as("b_id"))
-    val comps = Clusters.connectedComponents(pairs)
+    val comps = Clusters.connectedComponents(pairs)._1
       .select(col("doc_id").as("name"), col("cluster_id"), col("cluster_size"))
     val all = names.join(comps, Seq("name"), "left")
       .select(col("name"),

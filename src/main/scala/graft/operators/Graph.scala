@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Graph analytics over relational edge lists — PageRank as the flagship
-  * iterative-join shape (same execution family as the connected-components
-  * labeling in [[graft.dedup.Clusters]]: per round one shuffle join on the
-  * vertex id + one combiner-friendly aggregation, lineage truncated by
-  * `localCheckpoint`).
+  * iterative-join shape (the family of the large-star/small-star components
+  * in [[graft.dedup.Clusters]]: per round a shuffle join on the vertex id +
+  * a combiner-friendly aggregation, lineage truncated by `localCheckpoint`;
+  * unlike Clusters, which rewires its whole edge set each round, PageRank
+  * re-reads one fixed edge frame, so it pins that frame's partitioning).
   *
   * Determinism contract: all rank arithmetic is SCALED-INTEGER (`Long`,
   * rank × 10¹²) with explicit integral division, never floating point.
@@ -70,7 +71,7 @@ object Graph {
     * bounded by maxAdjLen regardless of hub degree. */
   def pageRank(edges: DataFrame, iterations: Int,
                maxAdjLen: Int = defaultMaxAdjLen): DataFrame = {
-    val adj = checkpointPartitioned(adjacency(edges, maxAdjLen), "src")
+    val adj = graft.util.Checkpoints.partitioned(adjacency(edges, maxAdjLen), "src")
     // split rows carry part > 0 — vertex count is the part-0 row count
     // (map-side countable; a distinct would cost the shuffle the split
     // representation exists to avoid)
@@ -129,11 +130,6 @@ object Graph {
       .groupBy("dst").agg(sum("c").as("s"))
       .select(col("dst").as("id"),
         (lit(teleport) + expr("(85 * s) div 100")).as("r"))
-
-  /** Partitioning-preserving checkpoint — see [[graft.util.Checkpoints]]
-    * for why a plain localCheckpoint loses its claim under AQE. */
-  private[graft] def checkpointPartitioned(df: DataFrame, key: String): DataFrame =
-    graft.util.Checkpoints.partitioned(df, key)
 
   /** Emit both directions of each undirected pair `(c, s)` in ONE pass —
     * the union formulation re-runs the pair derivation per branch (Spark
@@ -209,7 +205,7 @@ object Graph {
     val nSeeds = seeds.count()
     val teleport = (15L * Scale) / (100L * nSeeds)
     val seedSet = seeds.select(col("id").as("src"), lit(true).as("is_seed"))
-    val adj = checkpointPartitioned(
+    val adj = graft.util.Checkpoints.partitioned(
       adjBase
         .join(seedSet, Seq("src"), "left")
         .select(col("src"), col("adj"), col("wsum"),
@@ -504,7 +500,7 @@ object Graph {
     // per round under sort-merge, and an unpinned checkpoint would
     // re-SHUFFLE them, turning the telescoping O(E)-total contract into
     // O(E·maxHops)).
-    val adjE = checkpointPartitioned(
+    val adjE = graft.util.Checkpoints.partitioned(
       adjacency(edges, defaultMaxAdjLen).select("src", "adj"), "src")
     var dist = seeds.select(col("id"), lit(0).cast("int").as("hops"))
       .localCheckpoint(false)

@@ -4,8 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** Partitioning-preserving checkpoint for iterative-join loops
-  * (PageRank/BFS in [[graft.operators.Graph]], min-label propagation in
-  * [[graft.dedup.Clusters]]).
+  * (PageRank/BFS in [[graft.operators.Graph]]).
   *
   * Under AQE a plain `localCheckpoint()` records UnknownPartitioning in its
   * `LogicalRDD` — `AdaptiveSparkPlanExec` cannot expose the final plan's

@@ -660,7 +660,7 @@ class PlanSpec extends SparkSpec {
         .toDF("src", "dst")
       // the PRODUCTION adjacency builder (hub-split representation): the
       // posexplode must not break the groupBy's hash(src) claim
-      val adj = Graph.checkpointPartitioned(
+      val adj = graft.util.Checkpoints.partitioned(
         Graph.adjacency(edges, Graph.defaultMaxAdjLen), "src")
       val claim = adj.queryExecution.analyzed.asInstanceOf[LogicalRDD]
         .outputPartitioning
@@ -703,7 +703,7 @@ class PlanSpec extends SparkSpec {
       val wedges = edges.withColumn("w", lit(1L))
       val seedF = edges.select(col("src")).distinct().limit(3)
         .withColumn("is_seed", lit(true))
-      val adjW = Graph.checkpointPartitioned(
+      val adjW = graft.util.Checkpoints.partitioned(
         wedges.groupBy("src").agg(
           collect_list(struct(col("dst"), col("w"))).as("adj"),
           sum(col("w")).as("wsum"))

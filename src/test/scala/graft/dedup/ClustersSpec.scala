@@ -1,15 +1,17 @@
 package graft.dedup
 
 import graft.{SparkSpec, Tables}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 class ClustersSpec extends SparkSpec {
   import spark.implicits._
 
-  def cc(edges: Seq[(Long, Long)]) =
-    Clusters.connectedComponents(edges.toDF("a_id", "b_id"))
-      .select("doc_id", "cluster_id", "cluster_size")
+  def rows(df: DataFrame) =
+    df.select("doc_id", "cluster_id", "cluster_size")
       .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+
+  def cc(edges: Seq[(Long, Long)]) =
+    rows(Clusters.connectedComponents(edges.toDF("a_id", "b_id"))._1)
 
   test("components: chain, pair, and triangle resolve to min-id labels") {
     val got = cc(Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L), (20L, 22L)))
@@ -20,7 +22,7 @@ class ClustersSpec extends SparkSpec {
   }
 
   test("long path converges past one hop per round (diameter > 1)") {
-    // path 1-2-...-8: min label must walk 7 hops; also reversed edge order
+    // path 1-2-...-8 (diameter 7), edges given high id first
     val got = cc((1L to 7L).map(i => (i + 1, i)))
     assert(got === (1L to 8L).map(i => (i, 1L, 8L)))
   }
@@ -28,9 +30,8 @@ class ClustersSpec extends SparkSpec {
   test("components are partition-invariant") {
     val edges = (1L to 7L).map(i => (i + 1, i)) ++ Seq((100L, 200L))
     val a = cc(edges)
-    val b = Clusters.connectedComponents(edges.toDF("a_id", "b_id").repartition(13))
-      .select("doc_id", "cluster_id", "cluster_size")
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+    val b = rows(Clusters.connectedComponents(
+      edges.toDF("a_id", "b_id").repartition(13))._1)
     assert(a === b)
   }
 
@@ -38,34 +39,47 @@ class ClustersSpec extends SparkSpec {
     assert(cc(Seq.empty) === Seq.empty)
   }
 
-  def ccStar(edges: Seq[(Long, Long)]) = {
-    val (df, rounds) = Clusters.connectedComponentsStar(edges.toDF("a_id", "b_id"))
-    (df.select("doc_id", "cluster_id", "cluster_size")
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq, rounds)
-  }
-
-  test("star components match min-label propagation on mixed shapes") {
-    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L), (20L, 22L))
-    assert(ccStar(edges)._1 === cc(edges))
-  }
-
   test("star converges in logarithmic rounds on a long chain") {
     // path 1-2-...-200: diameter 199 — min-label propagation would need
     // ~199 rounds; the alternating star algorithm must stay logarithmic.
-    val edges = (1L to 199L).map(i => (i + 1, i))
-    val (got, rounds) = ccStar(edges)
-    assert(got === (1L to 200L).map(i => (i, 1L, 200L)))
+    val (df, rounds) = Clusters.connectedComponents(
+      (1L to 199L).map(i => (i + 1, i)).toDF("a_id", "b_id"))
+    assert(rows(df) === (1L to 200L).map(i => (i, 1L, 200L)))
     assert(rounds <= 12, s"expected O(log n) rounds on a 200-chain, got $rounds")
   }
 
   test("star components are partition-invariant and handle empty input") {
-    val edges = (1L to 7L).map(i => (i + 1, i)) ++ Seq((100L, 200L))
-    val a = ccStar(edges)._1
-    val b = Clusters.connectedComponentsStar(edges.toDF("a_id", "b_id").repartition(13))._1
+    // pseudo-random graph over 60 ids, checked against a union-find whose
+    // roots are component minima, at 1 and 13 input partitions
+    val edges = (0L until 80L).map(i => ((i * 37 + 11) % 60, (i * 53 + 7) % 60))
+      .filter { case (a, b) => a != b }
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else find(p)
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val vertices = edges.flatMap { case (a, b) => Seq(a, b) }.distinct.sorted
+    val sizes = vertices.groupBy(find).map { case (r, vs) => r -> vs.size.toLong }
+    val expected = vertices.map(v => (v, find(v), sizes(find(v))))
+    assert(cc(edges) === expected)
+    assert(rows(Clusters.connectedComponents(
+      edges.toDF("a_id", "b_id").repartition(13))._1) === expected)
+    assert(cc(Seq.empty) === Seq.empty)
+  }
+
+  test("String ids: components are labeled by their lexicographic minimum") {
+    // er1's label domain: the chain's first vertex "m" is not its minimum "a"
+    val edges = Seq(("m", "c"), ("c", "x"), ("x", "a"), ("q", "p"))
+    val got = Clusters.connectedComponents(edges.toDF("a_id", "b_id"))._1
       .select("doc_id", "cluster_id", "cluster_size")
-      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(a === b)
-    assert(ccStar(Seq.empty)._1 === Seq.empty)
+      .as[(String, String, Long)].collect().sortBy(_._1).toSeq
+    assert(got === Seq(
+      ("a", "a", 4L), ("c", "a", 4L), ("m", "a", 4L), ("p", "p", 2L),
+      ("q", "p", 2L), ("x", "a", 4L)))
   }
 
   test("d7 clusters cover exactly the docs that appear in d3 pairs") {
@@ -73,7 +87,7 @@ class ClustersSpec extends SparkSpec {
       .select("a_id", "b_id").as[(Long, Long)].collect()
     val clustered = Clusters.connectedComponents(
         Dedup.minHashLshPairs(Tables.documents(spark, sf001), 0.5)
-          .select("a_id", "b_id"))
+          .select("a_id", "b_id"))._1
       .select("doc_id", "cluster_id").as[(Long, Long)].collect().toMap
     val vertices = pairs.flatMap(p => Seq(p._1, p._2)).toSet
     assert(clustered.keySet === vertices)
