@@ -99,6 +99,10 @@ object Bench {
       total
     }
 
+    /** Distinct stages of the query's jobs: unlike `jobs`, the same work
+      * counts the same with AQE on (a job per query stage) or off. */
+    def stageCount: Int = synchronized(stages.size)
+
     def planText: String = synchronized(plans.values.map(normalizePlan).mkString("\n"))
   }
 
@@ -151,6 +155,7 @@ object Bench {
     Measure(seconds, ok, Seq(
       "jobs" -> l.jobs.toDouble,
       "prebuild_jobs" -> l.prebuildJobs.toDouble,
+      "stages" -> l.stageCount.toDouble,
       "tasks" -> l.tasks.toDouble,
       "exec_cpu_s" -> l.execCpuNs / 1e9,
       "shuffle_write_mb" -> l.shuffleWriteBytes / mb,

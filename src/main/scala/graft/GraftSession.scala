@@ -54,6 +54,10 @@ object GraftSession {
       // SPARK_GRAFT_EXTRA_JVM) still takes effect.
       .config("spark.io.compression.codec", sys.props.getOrElse("spark.io.compression.codec", "lz4"))
       .config("spark.sql.session.timeZone", "UTC")
+      // sql_frontend7's month spine recurses once per month: ~80 months in
+      // the generated data; raise the default 100-level cap so a wider
+      // driver date range never fails the recursion guard.
+      .config("spark.sql.cteRecursionLevelLimit", "2000")
       .config("spark.ui.enabled", "false")
       // events.parquet stores TIMESTAMP(NANOS); read as Long and convert
       // (Tables.events) to µs timestamps by truncation.

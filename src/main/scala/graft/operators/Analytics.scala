@@ -197,11 +197,9 @@ object Analytics {
     * gap months surface as explicit zero rows. The spine is O(#months) rows
     * regardless of data size, so recursion depth — not data volume — bounds
     * the loop; the join side is an ordinary shuffled aggregate. Sums ride
-    * the house decimal carrier; casts to DOUBLE at the boundary. */
+    * the house decimal carrier; casts to DOUBLE at the boundary. The
+    * recursion cap is raised in [[graft.GraftSession]]. */
   def sqlFrontend7(spark: SparkSession, dir: String): DataFrame = {
-    // ~80 months in the generated data; raise the default 100-level cap so a
-    // wider driver date range never fails the recursion guard.
-    spark.conf.set("spark.sql.cteRecursionLevelLimit", 2000)
     spark.sql(
       s"""WITH RECURSIVE bounds AS (
          |  SELECT date_trunc('month', MIN(o_orderdate)) AS lo,

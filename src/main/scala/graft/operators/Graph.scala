@@ -74,21 +74,22 @@ object Graph {
     val adj = graft.util.Checkpoints.partitioned(adjacency(edges, maxAdjLen), "src")
     // split rows carry part > 0 — vertex count is the part-0 row count
     // (map-side countable; a distinct would cost the shuffle the split
-    // representation exists to avoid)
+    // representation exists to avoid). This count is adj's first action,
+    // so it also fills the adjacency checkpoint.
     val n = adj.filter(col("part") === 0).count()
     val teleport = (15L * Scale) / (100L * n)
-    // LAZY checkpoints throughout the fixed-schedule loop (no per-round job
-    // launch; everything executes inside the consumer's single action), in
-    // the PARTITIONING-PRESERVING variant: each round's rank frame already
-    // ends hash-partitioned on its group key, so carrying that claim into
-    // the next round makes the rank-side join exchange VANISH — one round
+    // The round checkpoints are lazy too (no per-round job launch; the
+    // whole loop executes inside the consumer's single action) and keep
+    // the hash(id) claim: each round's rank frame already ends
+    // hash-partitioned on its group key, so carrying that claim into the
+    // next round makes the rank-side join exchange VANISH — one round
     // moves nothing but its own combined aggregation partials.
-    var ranks = graft.util.Checkpoints.partitionedLazy(
+    var ranks = graft.util.Checkpoints.partitioned(
       adj.filter(col("part") === 0)
         .select(col("src").as("id"), lit(Scale / n).as("r")), "id")
     var i = 0
     while (i < iterations) {
-      ranks = graft.util.Checkpoints.partitionedLazy(
+      ranks = graft.util.Checkpoints.partitioned(
         pageRankStep(adj, ranks, teleport), "id")
       i += 1
     }
@@ -195,10 +196,10 @@ object Graph {
     * flag is folded into the SAME checkpoint: the left join's build side
     * is the vertex-sized seed frame (its small shuffle is the only
     * traffic; the adjacency is already hash(src), which the checkpoint's
-    * repartition then elides), so one eager materialization carries
-    * adjacency, out-weight AND seed flag — a separate `vertices`
-    * checkpoint would be a second full V-row materialization job for a
-    * column this join attaches in-stage. */
+    * repartition then elides), so one checkpoint, filled inside the
+    * query's final action, carries adjacency, out-weight AND seed flag — a
+    * separate `vertices` checkpoint would be a second full V-row
+    * materialization for a column this join attaches in-stage. */
   private[graft] def personalizedPageRankAdj(adjBase: DataFrame,
                                              seeds: DataFrame,
                                              iterations: Int): DataFrame = {
@@ -217,13 +218,13 @@ object Graph {
     // per-round attach join stays exchange-free on this side.
     val vertices = adj.select(col("src").as("id"), col("is_seed"))
     // partitioning-preserving lazy round checkpoints — see [[pageRank]]
-    var ranks = graft.util.Checkpoints.partitionedLazy(
+    var ranks = graft.util.Checkpoints.partitioned(
       vertices.select(col("id"),
         when(col("is_seed"), lit(Scale / nSeeds)).otherwise(lit(0L)).as("r")),
       "id")
     var i = 0
     while (i < iterations) {
-      ranks = graft.util.Checkpoints.partitionedLazy(
+      ranks = graft.util.Checkpoints.partitioned(
         pprStep(adj, vertices, ranks, teleport), "id")
       i += 1
     }
@@ -513,7 +514,7 @@ object Graph {
       // settled set stays a plain lazy checkpoint: its union has no single
       // partitioning to carry, and repartitioning it per round would cost
       // exactly the exchange it saves in the anti probe.
-      val next = graft.util.Checkpoints.partitionedLazy(
+      val next = graft.util.Checkpoints.partitioned(
         bfsStep(adjE, frontier, dist, h), "id")
       dist = dist.unionByName(next).localCheckpoint(false)
       frontier = next.select("id")

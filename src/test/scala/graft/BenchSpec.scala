@@ -24,6 +24,7 @@ class BenchSpec extends SparkSpec {
     // and the two-phase enrichment materializes lazily: nothing runs before
     // the action.
     assert(metric(j02.last, "jobs") >= 1)
+    assert(metric(j02.last, "stages") >= 1)
     assert(metric(j02.last, "prebuild_jobs") === 0)
     // the PQ codebook sample is collected while the query is built
     assert(metric(s8, "prebuild_jobs") >= 1)

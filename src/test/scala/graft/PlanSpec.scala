@@ -671,14 +671,14 @@ class PlanSpec extends SparkSpec {
       // ranks built the production way: a partitioning-preserving lazy
       // checkpoint, so the rank-side claim makes the round join
       // exchange-free — ONE exchange per round (the combined dst partials)
-      val ranks0 = graft.util.Checkpoints.partitionedLazy(
+      val ranks0 = graft.util.Checkpoints.partitioned(
         adj.filter(col("part") === 0)
           .select(col("src").as("id"), lit(1000L).as("r")), "id")
       val pr0 = plan(Graph.pageRankStep(adj, ranks0, 7L))
       assert("Exchange hashpartitioning".r.findAllIn(pr0).size === 1,
         s"pageRank round 1 re-shuffles a frame it should not:\n$pr0")
       // steady state (round 2+): the previous round's OUTPUT re-enters
-      val ranks1 = graft.util.Checkpoints.partitionedLazy(
+      val ranks1 = graft.util.Checkpoints.partitioned(
         Graph.pageRankStep(adj, ranks0, 7L), "id")
       val pr1 = plan(Graph.pageRankStep(adj, ranks1, 7L))
       assert("Exchange hashpartitioning".r.findAllIn(pr1).size === 1,
@@ -689,7 +689,7 @@ class PlanSpec extends SparkSpec {
       // steady state: round 2 consumes a claim-carrying frontier — its
       // adjacency join is exchange-free; exactly the new-candidate distinct
       // + the settled side of the anti probe remain
-      val next1 = graft.util.Checkpoints.partitionedLazy(
+      val next1 = graft.util.Checkpoints.partitioned(
         Graph.bfsStep(adj, dist.select("id"), dist, 1), "id")
       val dist1 = dist.unionByName(next1).localCheckpoint(false)
       val bfs = plan(Graph.bfsStep(adj, next1.select("id"), dist1, 2))
@@ -711,7 +711,7 @@ class PlanSpec extends SparkSpec {
           .select(col("src"), col("adj"), col("wsum"),
             coalesce(col("is_seed"), lit(false)).as("is_seed")), "src")
       val vertices = adjW.select(col("src").as("id"), col("is_seed"))
-      val ranksW = graft.util.Checkpoints.partitionedLazy(
+      val ranksW = graft.util.Checkpoints.partitioned(
         vertices.select(col("id"), lit(1000L).as("r")), "id")
       val ppr = plan(Graph.pprStep(adjW, vertices, ranksW, 7L))
       // exactly: the dst aggregation — the rank-side contrib join AND the

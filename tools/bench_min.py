@@ -12,8 +12,10 @@ Modes:
                            that supplied it; 'sf' must agree across inputs.
                            Emits the same shape Bench writes so
                            ratio_table.py can consume the result directly.
-  --diff A B               per query, A -> B: time, jobs, prebuild_jobs,
-                           shuffle_write_mb and spill_mb; queries whose
+  --diff A B               per query, A -> B: time, jobs, stages,
+                           prebuild_jobs, shuffle_write_mb and spill_mb
+                           (stages count the same with AQE on or off,
+                           where jobs do not); queries whose
                            final-plan digest changed are flagged PLAN.
   --anchor OUT [--sfdir D] [--reps N]
                            measurement-window anchor (round-11 VERDICT #4):
@@ -39,7 +41,7 @@ import subprocess
 import sys
 import time
 
-DIFF_METRICS = ["jobs", "prebuild_jobs", "shuffle_write_mb", "spill_mb"]
+DIFF_METRICS = ["jobs", "stages", "prebuild_jobs", "shuffle_write_mb", "spill_mb"]
 ANCHORS = ["n1_nested_records", "a12_cohort_retention", "set_ops"]
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
