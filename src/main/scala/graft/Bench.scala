@@ -188,57 +188,26 @@ object Bench {
     // A throwing query must surface as a failure, not masquerade as its
     // wall time: failed queries report -1 in `queries`, are excluded from
     // `value`, and are listed by name under `failed`.
-    // This box exhibits MULTI-MINUTE episodic kernel stalls (threads spin in
-    // the futex slow path; sys time 10x user; 10-60x per-query wall
-    // inflation — see README "Bench variance"). A single timing inside an
-    // episode misreports the engine by an order of magnitude, and an
-    // IMMEDIATE retry lands inside the same episode (measured: a quiet-0.7s
-    // query at 103s across two back-to-back executions). So retries are
-    // DEFERRED: pass 1 times every query once; queries whose best time
-    // exceeds 5 s (every quiet-state query sits under ~4 s at sf0.1) are
-    // re-timed in up to two later passes, minutes of other work apart, and
-    // the per-query MIN is reported — the per-query form of the n=3-medians
-    // rule used across rounds, bounded at 3 executions per slow query.
+    // One pass times every query once; run-to-run noise (episodic kernel
+    // stalls, README "Bench variance") is handled by a second full pass
+    // merged with `tools/bench_min.py --merge`, not here. Only a FAILED
+    // query is re-timed, once, in a deferred pass after the main loop (an
+    // immediate retry lands inside the same stall), so a transient
+    // environmental failure does not cost the pass its data point.
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    // per query: (first-pass time, best attempt, attempts) — the JSON
-    // carries first_run and attempts next to the headline minima so a
-    // stall-inflated pass 1 is self-evidently noise (best << first, n > 1)
-    // instead of reading as a regression against an earlier round.
-    val best = mutable.LinkedHashMap[String, (Double, Measure, Int)]()
+    val runs = mutable.LinkedHashMap[String, Measure]()
+    ordered.foreach { case (name, fn) => runs(name) = measure(spark, name, fn, sfDir) }
     ordered.foreach { case (name, fn) =>
-      val m = measure(spark, name, fn, sfDir); best(name) = (m.seconds, m, 1)
+      if (!runs(name).ok) runs(name) = measure(spark, name, fn, sfDir)
     }
-    // Retry ceiling: the deferred re-time exists to dodge the box's
-    // episodic stalls, whose signature is a SHORT query reading 10-60x its
-    // quiet time. A best time already past this cap is a genuinely
-    // long-running query, where a blanket 3x re-run is costly and the
-    // stall's relative inflation is small anyway. Two carve-outs: failed
-    // queries re-try regardless (a transient environmental failure must
-    // not cost the pass its data point), and an above-cap time seen only
-    // ONCE gets exactly one re-time, so every reported minimum above the
-    // cap is the min of >= 2 observations.
-    val retryCap = 300.0
-    for (_ <- 1 to 2) {
-      val slow = ordered.filter { case (name, _) =>
-        val (_, m, n) = best(name)
-        !m.ok || (m.seconds > 5.0 && m.seconds <= retryCap) || (m.seconds > retryCap && n == 1)
-      }
-      slow.foreach { case (name, fn) =>
-        val (first, b, n) = best(name)
-        val m = measure(spark, name, fn, sfDir)
-        best(name) = (first, if (m.ok && (!b.ok || m.seconds < b.seconds)) m else b, n + 1)
-      }
-    }
-    def obj(f: ((Double, Measure, Int)) => String): String =
-      best.map { case (k, r) => "\"" + k + "\":" + f(r) }.mkString("{", ",", "}")
-    val qs = obj { case (_, m, _) => (if (m.ok) m.seconds else -1.0).toString }
-    val firsts = obj { case (f, m, _) => (if (m.ok) f else -1.0).toString }
-    val attempts = obj(_._3.toString)
-    val metrics = obj(_._2.metricsJson)
-    val failed = best.collect { case (k, (_, m, _)) if !m.ok => "\"" + k + "\"" }
+    def obj(f: Measure => String): String =
+      runs.map { case (k, m) => "\"" + k + "\":" + f(m) }.mkString("{", ",", "}")
+    val qs = obj(m => (if (m.ok) m.seconds else -1.0).toString)
+    val metrics = obj(_.metricsJson)
+    val failed = runs.collect { case (k, m) if !m.ok => "\"" + k + "\"" }
       .mkString("[", ",", "]")
-    val total = best.values.collect { case (_, m, _) if m.ok => m.seconds }.sum
+    val total = runs.values.collect { case m if m.ok => m.seconds }.sum
     // Self-documenting harness provenance (round-13 advice): runs with a
     // different heap or core count produce numbers that are NOT comparable
     // to default-harness rows of the same query — record the effective
@@ -256,22 +225,22 @@ object Bench {
     val harness =
       s""""harness":{"shuffle_partitions":$shufParts,""" +
       s""""max_heap_mb":${Runtime.getRuntime.maxMemory() / (1024 * 1024)},""" +
-      s""""cpus":${spark.sparkContext.defaultParallelism},"retry_cap":$retryCap,""" +
+      s""""cpus":${spark.sparkContext.defaultParallelism},""" +
       // the EFFECTIVE shuffle/spill codec, same truthful-form rule as
       // max_heap_mb (a -Dspark.io.compression.codec JVM option changes it)
       s""""io_codec":${graft.util.Json.str(spark.conf.get("spark.io.compression.codec"))}}"""
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"first_run":$firsts,"attempts":$attempts,"metrics":$metrics,"sf":"$sfDir","failed":$failed,$harness}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"metrics":$metrics,"sf":"$sfDir","failed":$failed,$harness}"""
     println(json)
     // stdout capture of a long sbt run can truncate (BENCH_r03 lost its
     // head); the file copy is the durable record. The final plans of the
-    // reported attempts go beside it, one normalized text per query.
+    // reported runs go beside it, one normalized text per query.
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(out), (json + "\n").getBytes("UTF-8"))
       val plans = java.nio.file.Paths.get(out.stripSuffix(".json") + ".plans")
       java.nio.file.Files.createDirectories(plans)
-      best.foreach { case (name, (_, m, _)) =>
+      runs.foreach { case (name, m) =>
         java.nio.file.Files.write(plans.resolve(s"$name.txt"), m.plan.getBytes("UTF-8"))
       }
     } catch { case e: Throwable => System.err.println(s"bench_out write failed: $e") }

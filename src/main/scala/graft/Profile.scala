@@ -21,13 +21,13 @@ object Profile {
     * the measured quality gain behind the PqSpec/IvfPqSpec floor raise. */
   def profilePqRecall(dir: String): Unit = {
     val spark = GraftSession()
-    import graft.similarity.{Knn, Pq}
+    import graft.similarity.{Ivf, Knn, Pq}
     val emb = Tables.embeddings(spark, dir)
     val n = emb.count()
     val exact = Knn.bruteForceTopK(emb, 5).select("a_id", "b_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val nlist = math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
-    val nprobe = math.max(2, nlist / 4)
+    val nlist = Ivf.nlistFor(n)
+    val nprobe = Ivf.nprobeFor(nlist)
     val ksub = Pq.ksubFor(n)
     def recall(df: DataFrame): Double = {
       val got = df.select("a_id", "b_id").collect()
@@ -47,8 +47,7 @@ object Profile {
     // multi-assign width scan at the production Lloyd setting (ma = ncoarse
     // makes the union ALL cells — the hierarchical assignment degenerates
     // to flat, so the row must match s9 and anchors the curve's ceiling)
-    val ncoarse = math.max(2, math.ceil(math.sqrt(nlist.toDouble)).toInt)
-    for (ma <- 1 to ncoarse) {
+    for (ma <- 1 to Ivf.ncoarseFor(nlist)) {
       println(f"s9b multiAssign=$ma recall=${
         recall(Pq.twoLevelIvfPqTopK(emb, nlist, nprobe, ksub, 5, 8,
           multiAssign = ma))}%.4f")
@@ -57,33 +56,17 @@ object Profile {
     spark.stop()
   }
 
-  /** The two-level IVF anchors of the s9b tier over `emb`: the nlist
-    * md5-ranked fine anchors `ranked` (cell, ce, r), the first ncoarse of
-    * them as coarse groups `coarse` (g, cg), and each fine anchor's
-    * nearest coarse group `fineGroups` (cell, g, ce). */
+  /** The two-level IVF anchors of the s9b tier over `emb`
+    * ([[graft.similarity.Ivf.twoLevelAnchors]]): the nlist md5-ranked fine
+    * anchors `ranked` (cell, ce, r), the first ncoarse of them as coarse
+    * groups `coarse` (g, cg), and each fine anchor's nearest coarse group
+    * `fineGroups` (cell, g, ce). */
   private def anchors(emb: DataFrame) = {
-    import graft.similarity.Knn
-    import org.apache.spark.sql.expressions.Window
+    import graft.similarity.Ivf
     val n = emb.count()
-    val nlist = math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
-    val ncoarse = math.max(2, math.ceil(math.sqrt(nlist.toDouble)).toInt)
-    val ak = graft.dedup.Dedup.md5Hash60(
-      concat(lit("ivfanchor|"), col("vec_id").cast("string")))
-    val ranked = graft.util.Caches.materialize(emb
-      .select(col("vec_id").as("cell"), col("embedding").as("ce"), ak.as("ak"))
-      .orderBy(col("ak"), col("cell")).limit(nlist)
-      .withColumn("r", row_number().over(Window.orderBy(col("ak"), col("cell"))))
-      .select("cell", "ce", "r"))
-    val coarse = ranked.filter(col("r") <= ncoarse)
-      .select(col("cell").as("g"), col("ce").as("cg"))
-    val fineGroups = ranked.select(col("cell"), col("ce"))
-      .crossJoin(broadcast(coarse))
-      .select(col("cell"), col("ce"), col("g"),
-        Knn.dotFold(col("ce"), col("cg")).as("gd"))
-      .groupBy("cell")
-      .agg(max_by(col("g"), struct(col("gd"), (-col("g")).as("ng"))).as("g"),
-        first(col("ce")).as("ce"))
-    (n, nlist, ncoarse, ranked, coarse, fineGroups)
+    val nlist = Ivf.nlistFor(n)
+    val (ranked, coarse, fineGroups) = Ivf.twoLevelAnchors(emb, nlist)
+    (n, nlist, Ivf.ncoarseFor(nlist), ranked, coarse, fineGroups)
   }
 
   /** The s9b width router's raw inputs on a given tier: the rank
@@ -115,31 +98,29 @@ object Profile {
     * assignment the multi-assign recovers. */
   def profileS9bDiag(dir: String): Unit = {
     val spark = GraftSession()
-    import graft.similarity.Knn
+    import graft.similarity.{Ivf, Knn}
     val emb = Tables.embeddings(spark, dir)
     val (n, nlist, ncoarse, ranked, coarse, fineGroups) = anchors(emb)
     // flat: argmax over ALL fine anchors
-    val flat = emb.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(ranked.select(col("cell"), col("ce"))))
-      .select(col("vec_id"),
-        Knn.dotFold(col("embedding"), col("ce")).as("fd"), col("cell"))
-      .groupBy("vec_id")
-      .agg(max_by(col("cell"), struct(col("fd"), (-col("cell")).as("nc"))).as("cell_flat"))
+    val flat = Ivf.argmax(emb.select(col("vec_id"), col("embedding"))
+        .crossJoin(broadcast(ranked.select(col("cell"), col("ce"))))
+        .select(col("vec_id"), col("cell"),
+          Knn.dotFold(col("embedding"), col("ce")).as("fd")),
+      col("vec_id"), "cell", "fd").withColumnRenamed("cell", "cell_flat")
     // hierarchical with k coarse groups
-    def hier(k: Int) = emb.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(coarse))
-      .select(col("vec_id"), col("embedding"), col("g"),
-        Knn.dotFold(col("embedding"), col("cg")).as("cd"))
-      .groupBy("vec_id")
-      .agg(slice(array_sort(collect_list(struct((-col("cd")).as("ncd"), col("g")))),
-          1, k).as("top"),
-        first(col("embedding")).as("embedding"))
-      .select(col("vec_id"), col("embedding"), explode(col("top.g")).as("g"))
-      .join(broadcast(fineGroups.select(col("g"), col("cell"), col("ce"))), "g")
-      .select(col("vec_id"),
-        Knn.dotFold(col("embedding"), col("ce")).as("fd"), col("cell"))
-      .groupBy("vec_id")
-      .agg(max_by(col("cell"), struct(col("fd"), (-col("cell")).as("nc"))).as("cell_h"))
+    def hier(k: Int) = Ivf.argmax(emb.select(col("vec_id"), col("embedding"))
+        .crossJoin(broadcast(coarse))
+        .select(col("vec_id"), col("embedding"), col("g"),
+          Knn.dotFold(col("embedding"), col("cg")).as("cd"))
+        .groupBy("vec_id")
+        .agg(slice(array_sort(collect_list(struct((-col("cd")).as("ncd"), col("g")))),
+            1, k).as("top"),
+          first(col("embedding")).as("embedding"))
+        .select(col("vec_id"), col("embedding"), explode(col("top.g")).as("g"))
+        .join(broadcast(fineGroups.select(col("g"), col("cell"), col("ce"))), "g")
+        .select(col("vec_id"), col("cell"),
+          Knn.dotFold(col("embedding"), col("ce")).as("fd")),
+      col("vec_id"), "cell", "fd").withColumnRenamed("cell", "cell_h")
     println(s"n=$n nlist=$nlist ncoarse=$ncoarse")
     for (k <- Seq(1, 2, 3)) {
       val diff = flat.join(hier(k), "vec_id")

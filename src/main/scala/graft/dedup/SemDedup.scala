@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.similarity.Knn
+import graft.similarity.{Ivf, Knn}
 
 /** Semantic deduplication over document embeddings — the SemDeDup recipe
   * (Abbas et al. 2023, arXiv:2303.09540): cluster the corpus into cells,
@@ -16,12 +16,12 @@ import graft.similarity.Knn
   *
   * Engine shape:
   *  - cells come from the deterministic-anchor quantizer s3b already proves
-  *    out (nlist ≈ √n corpus vectors with smallest salted md5 key; anchors
-  *    broadcast — a few MB at 10⁹ vectors), so the WHOLE pipeline is a pure
-  *    function of the data and DuckDB-oracle-gated, unlike k-means-seeded
-  *    SemDeDup whose centroids are library-internal.
-  *  - assignment is one corpus pass against the broadcast anchors (argmax
-  *    dot, ties to the smaller cell id — same rule as s3b).
+  *    out ([[Ivf.anchorList]]: nlist ≈ √n corpus vectors with smallest
+  *    salted md5 key; anchors broadcast — a few MB at 10⁹ vectors), so the
+  *    WHOLE pipeline is a pure function of the data and DuckDB-oracle-gated,
+  *    unlike k-means-seeded SemDeDup whose centroids are library-internal.
+  *  - assignment is one corpus pass against the broadcast anchors
+  *    ([[Ivf.argmax]]: argmax dot, ties to the smaller cell id — s3b's rule).
   *  - the within-cell self-join carries (id, cell, embedding, norm, quality)
   *    once through ONE shuffle on cell; quality = n_chars joined from
   *    `documents` (vec_id keys the same corpus as doc_id).
@@ -60,24 +60,14 @@ object SemDedup {
     * with its strongest beating partner. */
   def semDedupDrops(emb: DataFrame, docs: DataFrame, nlist: Int,
                     tau: Double, maxCell: Int = Int.MaxValue): DataFrame = {
-    val ak = Dedup.md5Hash60(concat(lit("semdedup|"), col("vec_id").cast("string")))
-    val anchors = emb
-      .select(col("vec_id").as("cell"), col("embedding").as("ce"), ak.as("ak"))
-      .orderBy(col("ak"), col("cell")).limit(nlist)
-      .select("cell", "ce")
+    val anchors = Ivf.anchorList(emb, "semdedup|", nlist).select("cell", "ce")
     // one corpus pass; plain dot, not cosine — the per-row argmax only needs
-    // a consistent score, and s3b's oracle-shared convention is raw dot.
-    // Argmax as a map-side-complete max_by aggregate (anchors are broadcast,
-    // so all of a vector's anchor scores sit in one input partition): the
-    // only shuffle is n 2-column rows — the old window formulation shuffled
-    // and sorted the whole n·nlist scored frame. The (s, -cell) struct key
-    // replays the window's tie-break (highest dot, then lowest cell).
-    val assign = emb.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(anchors))
-      .select(col("vec_id"), col("cell"),
-        Knn.dotFold(col("embedding"), col("ce")).as("s"))
-      .groupBy("vec_id")
-      .agg(max_by(col("cell"), struct(col("s"), (-col("cell")).as("nc"))).as("cell"))
+    // a consistent score, and s3b's oracle-shared convention is raw dot
+    val assign = Ivf.argmax(emb.select(col("vec_id"), col("embedding"))
+        .crossJoin(broadcast(anchors))
+        .select(col("vec_id"), col("cell"),
+          Knn.dotFold(col("embedding"), col("ce")).as("s")),
+      col("vec_id"), "cell", "s")
     dropsFromAssign(capCells(assign, maxCell), emb, docs, tau)
   }
 
@@ -167,12 +157,11 @@ object SemDedup {
     val anchors = emb
       .select(col("vec_id").as("cell"), col("embedding").as("ce"), ak.as("akk"))
       .filter(col("akk") < tAnchor).select("cell", "ce")
-    val assign = emb.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(anchors))
-      .select(col("vec_id"), col("cell"),
-        Knn.dotFold(col("embedding"), col("ce")).as("s"))
-      .groupBy("vec_id")
-      .agg(max_by(col("cell"), struct(col("s"), (-col("cell")).as("nc"))).as("cell"))
+    val assign = Ivf.argmax(emb.select(col("vec_id"), col("embedding"))
+        .crossJoin(broadcast(anchors))
+        .select(col("vec_id"), col("cell"),
+          Knn.dotFold(col("embedding"), col("ce")).as("s")),
+      col("vec_id"), "cell", "s")
       .withColumn("sub", lit(0L))
     dropsFromAssign(assign, emb, docs, tau)
   }
@@ -180,7 +169,7 @@ object SemDedup {
   def semDedupDropsTwoLevel(emb: DataFrame, docs: DataFrame, n: Long,
                             tau: Double, nlistOverride: Long = 0L): DataFrame = {
     val nlist = if (nlistOverride > 0) nlistOverride else math.max(16L, n / 256L)
-    val ncoarse = math.max(2L, math.ceil(math.sqrt(nlist.toDouble)).toLong)
+    val ncoarse = Ivf.ncoarseFor(nlist)
     // 2⁶⁰/n first, then ×count: the product can exceed 2⁵³, where doubles
     // go granular — IEEE gives both engines the same granular value, but
     // only if the operation ORDER is identical (the oracle spells it the
@@ -194,24 +183,14 @@ object SemDedup {
       .filter(col("akk") < tAnchor))
     val coarse = anchors.filter(col("akk") < tCoarse)
       .select(col("cell").as("g"), col("ce").as("cg"))
-    // fine anchor -> coarse group: argmax dot, ties to the lower group id.
-    // nlist·ncoarse dots over two bounded broadcast-sized frames.
-    val fineGroups = anchors.select(col("cell"), col("ce"))
-      .crossJoin(broadcast(coarse))
-      .select(col("cell"), col("ce"), col("g"),
-        Knn.dotFold(col("ce"), col("cg")).as("gd"))
-      .groupBy("cell")
-      .agg(max_by(col("g"), struct(col("gd"), (-col("g")).as("ng"))).as("g"),
-        first(col("ce")).as("ce"))
+    val fineGroups = Ivf.groupSplit(anchors, coarse)
     // corpus pass 1: nearest coarse group (n·ncoarse dots); the embedding
     // rides the aggregate so pass 2 needs no second corpus join
-    val coarseAssign = emb.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(coarse))
-      .select(col("vec_id"), col("embedding"), col("g"),
-        Knn.dotFold(col("embedding"), col("cg")).as("cd"))
-      .groupBy("vec_id")
-      .agg(max_by(col("g"), struct(col("cd"), (-col("g")).as("ng"))).as("g"),
-        first(col("embedding")).as("embedding"))
+    val coarseAssign = Ivf.argmax(emb.select(col("vec_id"), col("embedding"))
+        .crossJoin(broadcast(coarse))
+        .select(col("vec_id"), col("embedding"), col("g"),
+          Knn.dotFold(col("embedding"), col("cg")).as("cd")),
+      col("vec_id"), "g", "cd", "embedding")
     // corpus pass 2: nearest fine anchor WITHIN the assigned group
     // (n·nlist/ncoarse dots on average). fineGroups is nlist = n/256 rows
     // each carrying a full embedding — LINEAR in the corpus, so it must
@@ -220,12 +199,11 @@ object SemDedup {
     // side per g-partition is one group's fine anchors (≈ nlist/ncoarse ≈
     // 2√nlist rows — bounded), the stream side is that group's corpus
     // slice, and parallelism is ncoarse ≈ √(n/256) tasks, growing with n.
-    val assign = coarseAssign
-      .join(fineGroups.select(col("g"), col("cell"), col("ce")).hint("shuffle_hash"), "g")
-      .select(col("vec_id"), col("cell"),
-        Knn.dotFold(col("embedding"), col("ce")).as("fd"))
-      .groupBy("vec_id")
-      .agg(max_by(col("cell"), struct(col("fd"), (-col("cell")).as("nc"))).as("cell"))
+    val assign = Ivf.argmax(coarseAssign
+        .join(fineGroups.select(col("g"), col("cell"), col("ce")).hint("shuffle_hash"), "g")
+        .select(col("vec_id"), col("cell"),
+          Knn.dotFold(col("embedding"), col("ce")).as("fd")),
+      col("vec_id"), "cell", "fd")
       .withColumn("sub", lit(0L))
     dropsFromAssign(assign, emb, docs, tau)
   }
@@ -255,16 +233,14 @@ object SemDedup {
   def semDedupAuto(emb: DataFrame, docs: DataFrame, n: Long,
                    tau: Double): DataFrame =
     if (chooseSemDedup(n) == "flat")
-      semDedupDrops(emb, docs,
-        math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt), tau)
+      semDedupDrops(emb, docs, Ivf.nlistFor(n), tau)
     else semDedupDropsTwoLevel(emb, docs, n, tau)
 
   private[graft] def chooseSemDedup(n: Long): String =
     if (n <= semDedupFlatMaxN) "flat" else "two-level"
 
   def d9SemDedup(spark: SparkSession, dir: String): DataFrame = {
-    val n = Tables.cachedCount(spark, dir, "embeddings")
-    val nlist = math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
+    val nlist = Ivf.nlistFor(Tables.cachedCount(spark, dir, "embeddings"))
     semDedupDrops(Tables.embeddings(spark, dir), Tables.documents(spark, dir),
       nlist, tau = 0.3).orderBy("doc_id")
   }
@@ -275,13 +251,13 @@ object SemDedup {
       Tables.documents(spark, dir), n, tau = 0.3).orderBy("doc_id")
   }
 
-  /** d9c: the dispatching entry as a driver query. The oracle gate runs at
-    * sf0.01, whose embeddings table is 500 rows (same as sf0.001 — only
-    * sf0.1 grows it to 2000), so the deterministic route there is the
-    * FLAT path and the oracle is d9's SQL verbatim; SemDedupSpec proves
-    * the two-level route fires above the cutover. */
+  /** d9c: the dispatching entry as a driver query. Its oracle is the SQL
+    * of the variant the last run routed to ([[d9cRoute]]): d9's at the
+    * sf0.01 gate (500 embeddings, as at sf0.001), d9b's from sf0.1 (2000);
+    * SemDedupSpec proves the two-level route fires above the cutover. */
   def d9cSemDedupAuto(spark: SparkSession, dir: String): DataFrame = {
     val n = Tables.cachedCount(spark, dir, "embeddings")
+    d9cRoute = chooseSemDedup(n)
     semDedupAuto(Tables.embeddings(spark, dir), Tables.documents(spark, dir),
       n, tau = 0.3).orderBy("doc_id")
   }
@@ -294,11 +270,14 @@ object SemDedup {
 
   private val dotSql = Knn.dotSql
 
+  /** The route d9c took on its last run — Verify runs every query before
+    * it dumps the oracles, the fitted-oracle mechanism of s3 and s9c.
+    * Before any run it reads "flat", the route at the sf0.01 gate. */
+  @volatile private var d9cRoute = "flat"
+
   def oracle: Map[String, String] = Map(
     "d9_semdedup" -> d9Sql,
-    // dispatch at the gate's corpus (500 embeddings at sf0.01) routes to
-    // the flat path — the auto query's oracle IS d9's
-    "d9c_semdedup_auto" -> d9Sql,
+    "d9c_semdedup_auto" -> (if (d9cRoute == "flat") d9Sql else d9bSql),
     "d9b_semdedup_2level" -> d9bSql
   )
 

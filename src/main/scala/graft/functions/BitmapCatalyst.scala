@@ -25,7 +25,8 @@ import org.apache.spark.sql.types._
   * CONTRACT VIOLATION and throw (silently dropping them would desync the
   * count from the oracle's).
   *
-  * SQL: `bitmap_distinct(col, domain)` via [[BitmapCatalyst.register]]. */
+  * SQL: `bitmap_distinct(col, domain)`, injected by
+  * [[graft.plans.GraftExtensions]]. */
 case class BitmapDistinct(
     child: Expression,
     domain: Int,
@@ -88,17 +89,10 @@ case class BitmapDistinct(
 }
 
 object BitmapCatalyst {
-  import org.apache.spark.sql.{Column, SparkSession}
+  import org.apache.spark.sql.Column
   import org.apache.spark.sql.graft.Bridge
 
   def bitmap_distinct(c: Column, domain: Int): Column =
     Bridge.column(BitmapDistinct(Bridge.expression(c.cast("long")), domain)
       .toAggregateExpression())
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_distinct",
-      exprs => BitmapDistinct(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int]).toAggregateExpression(),
-      "scala_udf")
 }

@@ -93,16 +93,10 @@ case class CmsSketch(
 }
 
 object CmsCatalyst {
-  import org.apache.spark.sql.{Column, SparkSession}
+  import org.apache.spark.sql.Column
   import org.apache.spark.sql.graft.Bridge
 
   def cms_sketch(c: Column, depth: Int = 4, width: Int = 64): Column =
     Bridge.column(CmsSketch(Bridge.expression(c.cast("string")), depth, width)
       .toAggregateExpression())
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_sketch",
-      exprs => CmsSketch(exprs.head).toAggregateExpression(),
-      "scala_udf")
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.Bridge
@@ -282,15 +282,4 @@ object GraftFunctions {
       key: Column,
       bc: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]): Column =
     Bridge.column(BloomMightContainLong(Bridge.expression(key), bc))
-
-  /** SQL surface: register `money_parse` / `version_cmp` for spark.sql. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("money_parse",
-      exprs => MoneyParse(exprs.head), "scala_udf")
-    registry.createOrReplaceTempFunction("version_cmp",
-      exprs => VersionCmp(exprs(0), exprs(1)), "scala_udf")
-    registry.createOrReplaceTempFunction("dot_fold",
-      exprs => DotFold(exprs(0), exprs(1), zeroNulls = false), "scala_udf")
-  }
 }

@@ -26,7 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (HLL++) uses; this one exists to exercise the raw
   * `TypedImperativeAggregate` surface with a portable hash.
   *
-  * SQL: `approx_distinct_hll(col)` via [[HllCatalyst.register]]. */
+  * SQL: `approx_distinct_hll(col)`, injected by
+  * [[graft.plans.GraftExtensions]]. */
 case class ApproxDistinctHll(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
@@ -78,7 +79,7 @@ case class ApproxDistinctHll(
 }
 
 object HllCatalyst {
-  import org.apache.spark.sql.{Column, SparkSession}
+  import org.apache.spark.sql.Column
   import org.apache.spark.sql.graft.Bridge
 
   val P = 8
@@ -104,10 +105,4 @@ object HllCatalyst {
   def approx_distinct_hll(c: Column): Column =
     Bridge.column(ApproxDistinctHll(Bridge.expression(c.cast("string")))
       .toAggregateExpression())
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "approx_distinct_hll",
-      exprs => ApproxDistinctHll(exprs.head).toAggregateExpression(),
-      "scala_udf")
 }

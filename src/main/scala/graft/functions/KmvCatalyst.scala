@@ -3,7 +3,7 @@ package graft.functions
 import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -15,7 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (KmvSketch.KmvAgg). Same estimator, same md5-derived hash, so the two
   * surfaces can be cross-checked against each other.
   *
-  * SQL: `approx_distinct_kmv(col[, k])` via [[KmvCatalyst.register]]. */
+  * SQL: `approx_distinct_kmv(col)` (k = 256), injected by
+  * [[graft.plans.GraftExtensions]]. */
 case class ApproxDistinctKmv(
     child: Expression,
     k: Int = 256,
@@ -161,7 +162,7 @@ case class KmvMinHashes(
 }
 
 object KmvCatalyst {
-  import org.apache.spark.sql.{Column, SparkSession}
+  import org.apache.spark.sql.Column
   import org.apache.spark.sql.graft.Bridge
 
   def approx_distinct_kmv(c: Column, k: Int = 256): Column =
@@ -171,15 +172,4 @@ object KmvCatalyst {
   def kmv_minhashes(c: Column, k: Int = 256): Column =
     Bridge.column(KmvMinHashes(Bridge.expression(c.cast("string")), k)
       .toAggregateExpression())
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "approx_distinct_kmv",
-      exprs => ApproxDistinctKmv(exprs.head).toAggregateExpression(),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_minhashes",
-      exprs => KmvMinHashes(exprs.head).toAggregateExpression(),
-      "scala_udf")
-  }
 }

@@ -2,40 +2,150 @@ package graft.similarity
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** IVF (inverted-file) approximate nearest neighbor — the other standard
-  * scale path next to LSH (graft.similarity.Knn): a k-means coarse
-  * quantizer partitions the corpus into cells; a query scores only the
-  * `nprobe` cells whose centroids are nearest.
+  * scale path next to LSH (graft.similarity.Knn): a coarse quantizer
+  * partitions the corpus into cells; a query scores only the `nprobe`
+  * cells whose centroids or anchors are nearest.
   *
-  * Cost model at 100 TB: index build is one MLlib k-means fit (sampled) +
-  * one assignment pass; each query touches |corpus|·nprobe/nlist vectors.
-  * The cell id is a plain partition-friendly column — at scale the corpus
-  * would be written `partitionBy("cell")` so a probe prunes whole files.
-  * Deterministic: fixed k-means seed. */
+  * The coarse quantizer is written once here, one function per step, and
+  * shared by the s3 family (this object), IVFADC (s9, [[Pq]]) and
+  * SemDeDup (d9, [[graft.dedup.SemDedup]]): the √n sizing ([[nlistFor]],
+  * [[nprobeFor]], [[ncoarseFor]]), the md5-ranked anchor list
+  * ([[anchorList]]), the assignment argmax ([[argmax]]), the
+  * fine-to-coarse group split ([[groupSplit]]) and the per-query probe
+  * ranking ([[probeRank]]). Every argmax and ranking breaks ties to the
+  * lower id — the rule each DuckDB oracle's `row_number` replays.
+  *
+  * Cost model at 100 TB: the quantizer is a bounded table (nlist ≈ √n
+  * rows ⇒ a few MB at 10⁹ vectors) that broadcasts; assignment is one
+  * corpus pass against it; each query touches |corpus|·nprobe/nlist
+  * vectors. The cell id is a plain partition-friendly column — at scale
+  * the corpus would be written `partitionBy("cell")` so a probe prunes
+  * whole files. */
 object Ivf {
 
-  case class IvfIndex(assignments: DataFrame /* (vec_id, cell, embedding) */ ,
-                      centroids: Array[(Int, Array[Double])])
+  /** nlist ≈ √n cells (at least 4): cells of ≈ √n vectors, so a probe
+    * touches nprobe·√n candidates — the standard IVF cost curve. */
+  def nlistFor(n: Long): Int = math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
 
-  /** Build: fit the coarse quantizer on a deterministic hash-sample of the
-    * corpus (`fitFrac`), then assign EVERY vector to a cell. The split is
-    * the 100 TB shape: each k-means iteration touches only the sample
-    * (~50·nlist rows suffices for a coarse quantizer), while the single
-    * assignment pass streams the full corpus once. The sample key is the
-    * same md5 family as [[graft.text.CorpusOps.hashSample]] — reproducible
-    * across runs, engines, and cluster sizes, never `rand()`. */
-  def build(emb: DataFrame, nlist: Int, seed: Long = 42L,
-            fitFrac: Double = 1.0): IvfIndex = {
+  /** Cells a query probes: a quarter of them (at least 2), ~4× scan
+    * reduction traded for recall (IvfSpec pins the recall floor). */
+  def nprobeFor(nlist: Int): Int = math.max(2, nlist / 4)
+
+  /** Coarse groups of a two-level quantizer: ≈ √nlist (at least 2), so a
+    * vector pays ncoarse + nlist/ncoarse ≈ 2√nlist dots, not nlist. */
+  def ncoarseFor(nlist: Long): Int = math.max(2, math.ceil(math.sqrt(nlist.toDouble)).toInt)
+
+  /** The `nlist` corpus vectors with the smallest `salt`ed md5 key, ties to
+    * the lower id, as (cell, ce, ak): cell is the anchor's vec_id, ce its
+    * embedding. A pure function of the data (so the oracle recomputes it),
+    * planned as one corpus-wide TakeOrdered of nlist rows. */
+  def anchorList(emb: DataFrame, salt: String, nlist: Int): DataFrame = {
+    val ak = graft.dedup.Dedup.md5Hash60(concat(lit(salt), col("vec_id").cast("string")))
+    emb.select(col("vec_id").as("cell"), col("embedding").as("ce"), ak.as("ak"))
+      .orderBy(col("ak"), col("cell")).limit(nlist)
+  }
+
+  /** Per `key`, the `id` of the row with the highest `score`, ties to the
+    * lower id; `carry` columns (constant per key) ride through `first`.
+    * One aggregate: when the scores come from a cross join against a
+    * broadcast table, all of a key's rows sit in one input partition, so
+    * the partial aggregate finishes in-stage and the only shuffle is one
+    * row per key — a window would shuffle and sort every scored row. The
+    * struct key (score, −id) is the window's tie-break. */
+  def argmax(scored: DataFrame, key: Column, id: String, score: String,
+             carry: String*): DataFrame =
+    scored.groupBy(key).agg(
+      max_by(col(id), struct(col(score), (-col(id)).as("n" + id.head))).as(id),
+      carry.map(c => first(col(c)).as(c)): _*)
+
+  /** Each fine anchor's coarse group, (cell, g, ce): the argmax dot of
+    * `fine` (cell, ce) over the broadcast `coarse` (g, cg). nlist·ncoarse
+    * dots over two bounded frames — driver-scale work kept distributed so
+    * the plan is one shape at every size. */
+  def groupSplit(fine: DataFrame, coarse: DataFrame): DataFrame =
+    argmax(fine.select(col("cell"), col("ce"))
+        .crossJoin(broadcast(coarse))
+        .select(col("cell"), col("ce"), col("g"),
+          Knn.dotFold(col("ce"), col("cg")).as("gd")),
+      col("cell"), "g", "gd", "ce")
+
+  /** Per query vector (`vec_id`), its `nprobe` best cells by `score`, ties
+    * to the lower cell. Callers score only the fixed-count query stratum,
+    * so the window sorts queryN·nlist rows. */
+  def probeRank(scored: DataFrame, score: String, nprobe: Int): DataFrame =
+    scored.withColumn("ark", row_number().over(
+        Window.partitionBy("vec_id").orderBy(col(score).desc, col("cell").asc)))
+      .filter(col("ark") <= nprobe)
+
+  /** The two-level quantizer's anchors over the "ivfanchor|" list: the
+    * ranked list (cell, ce, r), persisted — the group split, the
+    * assignment and the probe scorer each read it, and would otherwise
+    * each re-run the corpus-wide TakeOrdered; its first [[ncoarseFor]]
+    * rows as the coarse groups (g, cg); and the [[groupSplit]]. The
+    * single-partition window is over nlist (≈ √n) rows. */
+  def twoLevelAnchors(emb: DataFrame, nlist: Int): (DataFrame, DataFrame, DataFrame) = {
+    val ranked = graft.util.Caches.materialize(anchorList(emb, "ivfanchor|", nlist)
+      .withColumn("r", row_number().over(Window.orderBy(col("ak"), col("cell"))))
+      .select("cell", "ce", "r"))
+    val coarse = ranked.filter(col("r") <= ncoarseFor(nlist))
+      .select(col("cell").as("g"), col("ce").as("cg"))
+    (ranked, coarse, groupSplit(ranked, coarse))
+  }
+
+  /** `score` of every vector of `vecs` against the broadcast `cells`
+    * table: (vec_id, cell, s). */
+  private def scoreCells(vecs: DataFrame, cells: DataFrame, score: Column): DataFrame =
+    vecs.select(col("vec_id"), col("embedding"))
+      .crossJoin(broadcast(cells))
+      .select(col("vec_id"), col("cell"), score.as("s"))
+
+  /** The search side of the s3 family: probe each query's `nprobe` best
+    * `cells` by `score`, take the vectors `assign` (b_id, cell) put there,
+    * and rank them by exact dot. The probes cover only the fixed-count
+    * query stratum; the rerank joins are plain shuffle equi-joins. */
+  private def probeTopK(emb: DataFrame, cells: DataFrame, score: Column,
+                        assign: DataFrame, nprobe: Int, k: Int): DataFrame = {
+    val stratum = emb.join(broadcast(Knn.queryIds(emb)), "vec_id")
+    val probes = probeRank(scoreCells(stratum, cells, score), "s", nprobe)
+      .select(col("vec_id").as("a_id"), col("cell"))
+    // each b sits in exactly one cell and each (a, cell) probe is unique, so
+    // (a_id, b_id) is already distinct — no dedup stage before scoring
+    val cand = probes.join(assign, "cell")
+      .filter(col("a_id") =!= col("b_id"))
+      .select("a_id", "b_id")
+    Knn.scoredTopK(emb, cand, k)
+  }
+
+  /** Flat IVF: every vector goes to its best cell by `score` ([[argmax]],
+    * n·nlist scores against the broadcast cell table), then [[probeTopK]]. */
+  private def flatTopK(emb: DataFrame, cells: DataFrame, score: Column,
+                       nprobe: Int, k: Int): DataFrame =
+    probeTopK(emb, cells, score,
+      argmax(scoreCells(emb, cells, score), col("vec_id").as("b_id"), "cell", "s"),
+      nprobe, k)
+
+  /** The k-means coarse quantizer of s3: an MLlib fit on a deterministic
+    * hash-sample of the corpus (`fitFrac`; each iteration touches only the
+    * sample — ~50·nlist rows suffice for a coarse quantizer), returned as
+    * plain driver-side doubles so the s3 pipeline can ship them BOTH to
+    * the Spark plan and into the DuckDB oracle as identical literals. The
+    * sample key is the same md5 family as
+    * [[graft.text.CorpusOps.hashSample]] — reproducible across runs,
+    * engines, and cluster sizes, never `rand()`. Deterministic: fixed
+    * k-means seed. */
+  def fitCentroids(emb: DataFrame, nlist: Int, seed: Long = 42L,
+                   fitFrac: Double = 1.0): Array[(Int, Array[Double])] = {
     val spark = emb.sparkSession
     import spark.implicits._
     val withVec = emb.select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])]
-      .map { case (id, e) => (id, Vectors.dense(e.map(_.toDouble)), e) }
-      .toDF("vec_id", "features", "embedding")
+      .map { case (id, e) => (id, Vectors.dense(e.map(_.toDouble))) }
+      .toDF("vec_id", "features")
     val fitSet =
       if (fitFrac >= 1.0) withVec
       else withVec.filter(
@@ -43,17 +153,8 @@ object Ivf {
           < lit((fitFrac * (1L << 60).toDouble).toLong))
     val model = new KMeans().setK(nlist).setSeed(seed).setFeaturesCol("features")
       .fit(fitSet)
-    val assigned = model.transform(withVec)
-      .select(col("vec_id"), col("prediction").as("cell"), col("embedding"))
-    IvfIndex(assigned, model.clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray) })
+    model.clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray) }
   }
-
-  /** Just the fitted centroid table of [[build]] — the s3 pipeline wants the
-    * centroids as plain driver-side doubles so it can ship them BOTH to the
-    * Spark plan and into the DuckDB oracle as identical literals. */
-  def fitCentroids(emb: DataFrame, nlist: Int, seed: Long = 42L,
-                   fitFrac: Double = 1.0): Array[(Int, Array[Double])] =
-    build(emb, nlist, seed, fitFrac).centroids
 
   /** IVF search against an EXPORTED literal centroid table — the arithmetic
     * the DuckDB oracle replays verbatim. Assignment and probing both rank
@@ -64,36 +165,16 @@ object Ivf {
     * arithmetic both engines reproduce bit-for-bit from the same `%.17e`
     * literals. MLlib's own `model.transform` is deliberately NOT used for
     * assignment: its triangle-inequality-pruned distance path computes
-    * different intermediate floats than any SQL twin could.
-    *
-    * Scale shape is s3b's: the centroid table broadcasts (nlist ≈ √n ⇒ a few
-    * MB at 10⁹ vectors), assignment is a map-side max_by (the only shuffle is
-    * n 2-column rows), probes rank only the fixed-count query stratum, and
-    * the rerank joins are plain shuffle equi-joins. */
+    * different intermediate floats than any SQL twin could. The probe,
+    * assign and rerank body is [[anchorIvfTopK]]'s. */
   def centroidTopK(emb: DataFrame, cents: Array[(Int, Array[Double])],
                    nprobe: Int, k: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val anchors = cents.toSeq
+    val cells = cents.toSeq
       .map { case (c, v) => (c, v, 0.5 * v.map(x => x * x).sum) }
       .toDF("cell", "ce", "hcc")
-    def scored(vecs: DataFrame): DataFrame =
-      vecs.select(col("vec_id"), col("embedding"))
-        .crossJoin(broadcast(anchors))
-        .select(col("vec_id"), col("cell"),
-          (Knn.dotFold(col("embedding"), col("ce")) - col("hcc")).as("s"))
-    val assign = scored(emb)
-      .groupBy(col("vec_id").as("b_id"))
-      .agg(max_by(col("cell"), struct(col("s"), (-col("cell")).as("nc"))).as("cell"))
-    val probes = scored(emb.join(broadcast(Knn.queryIds(emb)), "vec_id"))
-      .withColumn("ark", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("s").desc, col("cell").asc)))
-      .filter(col("ark") <= nprobe)
-      .select(col("vec_id").as("a_id"), col("cell"))
-    val cand = probes.join(assign, "cell")
-      .filter(col("a_id") =!= col("b_id"))
-      .select("a_id", "b_id")
-    Knn.scoredTopK(emb, cand, k)
+    flatTopK(emb, cells, Knn.dotFold(col("embedding"), col("ce")) - col("hcc"), nprobe, k)
   }
 
   private def litD(d: Double): String =
@@ -151,55 +232,19 @@ object Ivf {
     * simply omitted and the driver falls back to its rows-only record. */
   @volatile private var s3FittedOracle: Option[String] = None
 
-  /** Search: for the given query vectors, probe the nprobe nearest cells
-    * and rank candidates by exact dot product. */
-  def search(index: IvfIndex, queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val cents = index.centroids
-    // driver-side probe-cell selection per query (centroid table is tiny)
-    val probeCells = queries.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, e) =>
-        val d = e.map(_.toDouble)
-        val best = cents.map { case (c, cv) =>
-          (c, cv.zip(d).map { case (x, y) => x * y }.sum)
-        }.sortBy { case (c, dot) => (-dot, c) }.take(nprobe).map(_._1)
-        (id, best)
-      }.toDF("a_id", "cells")
-    val probes = probeCells.select(col("a_id"), explode(col("cells")).as("cell"))
-
-    // probes (|queries|·nprobe rows) and q (the query stratum) both scale
-    // with the corpus: plain shuffle equi-joins, no broadcast hints — AQE
-    // broadcasts them at runtime only when they are actually small.
-    val q = queries.select(col("vec_id").as("a_id"), col("embedding").as("ea"))
-    val cand = index.assignments.toDF("b_id", "cell", "eb")
-      .join(probes, "cell")
-      .filter(col("a_id") =!= col("b_id"))
-      .join(q, "a_id")
-      .select(col("a_id"), col("b_id"), Knn.dotFold(col("ea"), col("eb")).as("dot"))
-    val rk = Window.partitionBy("a_id").orderBy(col("dot").desc, col("b_id").asc)
-    cand.withColumn("rk", row_number().over(rk))
-      .filter(col("rk") <= k)
-      .select("a_id", "rk", "b_id", "dot")
-  }
-
   /** Driver query: IVF top-5 for the fixed-count query stratum
     * ([[Knn.queryIds]] — a constant-size query set, so search cost is
     * queryN·nprobe·√n, sub-linear in the corpus; the old fractional
-    * stratum made it O(n²/80) and measured 13.2× at 10× data).
-    * nlist ≈ √n keeps cells at √n vectors, so a probe touches
-    * nprobe·√n candidates — the standard IVF cost curve; nprobe = nlist/4
-    * trades ~4× scan reduction for recall (IvfSpec pins the recall floor
-    * and exact-dot correctness). ORACLE-GATED since round 9: the k-means
-    * fit exports its centroids as literals and [[centroidTopK]] /
+    * stratum made it O(n²/80) and measured 13.2× at 10× data), at the
+    * [[nlistFor]]/[[nprobeFor]] sizing. ORACLE-GATED since round 9: the
+    * k-means fit exports its centroids as literals and [[centroidTopK]] /
     * [[s3OracleSql]] replay identical arithmetic, so the driver checks
     * rows+schema+hash against DuckDB like every other tier. */
   def s3KnnIvf(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val emb = graft.Tables.embeddings(spark, dir)
     val n = graft.Tables.cachedCount(spark, dir, "embeddings")
-    val nlist = math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
-    val nprobe = math.max(2, nlist / 4)
+    val nlist = nlistFor(n)
+    val nprobe = nprobeFor(nlist)
     // quantizer fit sample: ~50 points per centroid is plenty for a coarse
     // quantizer; below 50·nlist rows the sample is the whole corpus (so the
     // driver gate at sf0.01 fits on all 500 vectors, unchanged), above it
@@ -212,64 +257,25 @@ object Ivf {
 
   /** Deterministic-anchor IVF ("IVF-flat with a hash-chosen coarse
     * quantizer"): the nlist cells are anchored at the corpus vectors whose
-    * md5 key is smallest, instead of k-means centroids. The quantizer is a
-    * pure function of the data, so — unlike [[s3KnnIvf]], whose centroids
-    * are MLlib-internal — the WHOLE pipeline is SQL-expressible and
-    * DuckDB-oracle-gated. Same cost curve as k-means IVF: assignment is the
-    * standard O(n·nlist) scan against the broadcast anchor table (nlist ≈ √n
-    * ⇒ a few MB even at 10⁹ vectors, the one legitimately-broadcast side in
-    * this family), search touches nprobe cells. Recall sits below k-means
+    * md5 key is smallest ([[anchorList]]), instead of k-means centroids.
+    * The quantizer is a pure function of the data, so — unlike
+    * [[s3KnnIvf]], whose centroids are MLlib-internal — the WHOLE pipeline
+    * is SQL-expressible and DuckDB-oracle-gated. Same cost curve as k-means
+    * IVF: assignment is the standard O(n·nlist) scan against the broadcast
+    * anchor table, search touches nprobe cells. Recall sits below k-means
     * IVF (anchors are corpus samples, not optimized centroids); trading
     * centroid quality for end-to-end determinism is the point. */
-  def anchorIvfTopK(emb: DataFrame, nlist: Int, nprobe: Int, k: Int): DataFrame = {
-    val ak = graft.dedup.Dedup.md5Hash60(
-      concat(lit("ivfanchor|"), col("vec_id").cast("string")))
-    val anchors = emb
-      .select(col("vec_id").as("cell"), col("embedding").as("ce"), ak.as("ak"))
-      .orderBy(col("ak"), col("cell")).limit(nlist)
-      .select("cell", "ce")
-    // n·nlist anchor dots per side, scored against the BROADCAST anchor
-    // table (nlist ≈ √n ⇒ a few MB even at 10⁹ vectors)
-    def scored(vecs: DataFrame): DataFrame =
-      vecs.select(col("vec_id"), col("embedding"))
-        .crossJoin(broadcast(anchors))
-        .select(col("vec_id"), col("cell"),
-          Knn.dotFold(col("embedding"), col("ce")).as("adot"))
-    // Assignment argmax as ONE map-side-complete aggregate: the anchors are
-    // broadcast, so every (vec, anchor) score of a vector sits in the same
-    // input partition and the max_by partial finishes in-stage — the only
-    // shuffle is n 2-column rows. (The old formulation cached the full
-    // n·nlist scored frame and ranked it with a window: a shuffle + sort of
-    // the whole O(n^1.5) frame just to pick each vector's max. max_by's
-    // (adot, -cell) struct key replays the window's exact tie-break:
-    // highest dot, then LOWEST cell.)
-    val assign = scored(emb)
-      .groupBy(col("vec_id").as("b_id"))
-      .agg(max_by(col("cell"), struct(col("adot"), (-col("cell")).as("nc"))).as("cell"))
-    // probe ranking needs top-nprobe PER QUERY only — score just the
-    // queryN-row stratum (queryN·nlist rows; the window sort is trivial)
-    val probes = scored(emb.join(broadcast(Knn.queryIds(emb)), "vec_id"))
-      .withColumn("ark", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("adot").desc, col("cell").asc)))
-      .filter(col("ark") <= nprobe)
-      .select(col("vec_id").as("a_id"), col("cell"))
-    // each b sits in exactly one cell and each (a, cell) probe is unique, so
-    // (a_id, b_id) is already distinct — no dedup stage before scoring
-    val cand = probes.join(assign, "cell")
-      .filter(col("a_id") =!= col("b_id"))
-      .select("a_id", "b_id")
-    Knn.scoredTopK(emb, cand, k)
-  }
+  def anchorIvfTopK(emb: DataFrame, nlist: Int, nprobe: Int, k: Int): DataFrame =
+    flatTopK(emb, anchorList(emb, "ivfanchor|", nlist).select("cell", "ce"),
+      Knn.dotFold(col("embedding"), col("ce")), nprobe, k)
 
   /** Driver query: anchor-IVF top-5 with the same nlist/nprobe curve as
     * [[s3KnnIvf]] — but hash-exact against DuckDB (the oracle recomputes the
     * anchor choice, assignment argmax, probe ranking, and exact rerank). */
   def s3bKnnIvfAnchor(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val emb = graft.Tables.embeddings(spark, dir)
-    val n = graft.Tables.cachedCount(spark, dir, "embeddings")
-    val nlist = math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
-    val nprobe = math.max(2, nlist / 4)
-    anchorIvfTopK(emb, nlist, nprobe, k = 5).orderBy("a_id", "rk")
+    val nlist = nlistFor(graft.Tables.cachedCount(spark, dir, "embeddings"))
+    anchorIvfTopK(emb, nlist, nprobeFor(nlist), k = 5).orderBy("a_id", "rk")
   }
 
   /** Hierarchical (two-level) anchor IVF — the 100 TB assignment path. The
@@ -287,13 +293,14 @@ object Ivf {
     * group lands in a near-optimal cell instead.
     *
     * Everything stays a pure function of the data — coarse anchors are the
-    * ncoarse md5-smallest of the SAME ranked anchor list s3b uses, fine
-    * anchors join their argmax coarse group, and every argmax breaks ties
-    * to the lower id — so the whole pipeline is DuckDB-oracle-gated like
-    * s3b. Probe side is IDENTICAL to s3b (the query stratum is a fixed
-    * [[Knn.queryN]] rows; scoring it against all nlist fine anchors is
-    * queryN·nlist — noise), so s3c differs from s3b only where the scale
-    * cost lives: the corpus assignment pass.
+    * ncoarse md5-smallest of the SAME ranked anchor list s3b uses
+    * ([[twoLevelAnchors]]), fine anchors join their argmax coarse group,
+    * and every argmax breaks ties to the lower id — so the whole pipeline
+    * is DuckDB-oracle-gated like s3b. The probe side is s3b's
+    * ([[probeTopK]] over all nlist fine anchors: the query stratum is a
+    * fixed [[Knn.queryN]] rows, so that is queryN·nlist — noise), so s3c
+    * differs from s3b only where the scale cost lives: the corpus
+    * assignment pass.
     *
     * Dataflow shape: every join against an anchor-derived frame broadcasts
     * ≤ nlist rows (√n ⇒ a few MB at 10⁹ vectors — the bounded-side
@@ -302,72 +309,30 @@ object Ivf {
     * input partition), and the only corpus-sized exchanges are n-row
     * 2-to-3-column frames. */
   def twoLevelAnchorTopK(emb: DataFrame, nlist: Int, nprobe: Int, k: Int): DataFrame = {
-    val ncoarse = math.max(2, math.ceil(math.sqrt(nlist.toDouble)).toInt)
-    val ak = graft.dedup.Dedup.md5Hash60(
-      concat(lit("ivfanchor|"), col("vec_id").cast("string")))
-    // nlist rows; persisted — read by coarse, the fine-group build, and the
-    // probe scorer, each of which would otherwise re-run the corpus-wide
-    // TakeOrdered underneath. The single-partition window is over nlist
-    // (≈ √n) rows, bounded at any corpus size.
-    val ranked = graft.util.Caches.materialize(emb
-      .select(col("vec_id").as("cell"), col("embedding").as("ce"), ak.as("ak"))
-      .orderBy(col("ak"), col("cell")).limit(nlist)
-      .withColumn("r", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("ak"), col("cell"))))
-      .select("cell", "ce", "r"))
-    val coarse = ranked.filter(col("r") <= ncoarse)
-      .select(col("cell").as("g"), col("ce").as("cg"))
-    // fine anchor -> coarse group: argmax dot, ties to the lower group id.
-    // nlist·ncoarse dots over two bounded frames — driver-scale work kept
-    // distributed anyway so the plan is one shape at every size.
-    val fineGroups = ranked.select(col("cell"), col("ce"))
-      .crossJoin(broadcast(coarse))
-      .select(col("cell"), col("ce"), col("g"),
-        Knn.dotFold(col("ce"), col("cg")).as("gd"))
-      .groupBy("cell")
-      .agg(max_by(col("g"), struct(col("gd"), (-col("g")).as("ng"))).as("g"),
-        first(col("ce")).as("ce"))
+    val (ranked, coarse, fineGroups) = twoLevelAnchors(emb, nlist)
     // corpus pass 1: nearest coarse group (n·ncoarse dots). The embedding
-    // rides the aggregate (first() — constant per vec_id) so the fine pass
-    // needs no second corpus join.
-    val coarseAssign = emb.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(coarse))
-      .select(col("vec_id"), col("embedding"), col("g"),
-        Knn.dotFold(col("embedding"), col("cg")).as("cd"))
-      .groupBy("vec_id")
-      .agg(max_by(col("g"), struct(col("cd"), (-col("g")).as("ng"))).as("g"),
-        first(col("embedding")).as("embedding"))
+    // rides the aggregate so the fine pass needs no second corpus join.
+    val coarseAssign = argmax(emb.select(col("vec_id"), col("embedding"))
+        .crossJoin(broadcast(coarse))
+        .select(col("vec_id"), col("embedding"), col("g"),
+          Knn.dotFold(col("embedding"), col("cg")).as("cd")),
+      col("vec_id"), "g", "cd", "embedding")
     // corpus pass 2: nearest fine anchor WITHIN the assigned group
     // (n·(nlist/ncoarse) dots on average)
-    val fineAssign = coarseAssign
-      .join(broadcast(fineGroups.select(col("g"), col("cell"), col("ce"))), "g")
-      .select(col("vec_id"), col("cell"),
-        Knn.dotFold(col("embedding"), col("ce")).as("fd"))
-      .groupBy(col("vec_id").as("b_id"))
-      .agg(max_by(col("cell"), struct(col("fd"), (-col("cell")).as("nc"))).as("cell"))
-    // probe side: verbatim s3b — rank ALL fine anchors per query vector
-    val probes = emb.join(broadcast(Knn.queryIds(emb)), "vec_id")
-      .select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(ranked.select(col("cell"), col("ce"))))
-      .select(col("vec_id"), col("cell"),
-        Knn.dotFold(col("embedding"), col("ce")).as("adot"))
-      .withColumn("ark", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("adot").desc, col("cell").asc)))
-      .filter(col("ark") <= nprobe)
-      .select(col("vec_id").as("a_id"), col("cell"))
-    val cand = probes.join(fineAssign, "cell")
-      .filter(col("a_id") =!= col("b_id"))
-      .select("a_id", "b_id")
-    Knn.scoredTopK(emb, cand, k)
+    val fineAssign = argmax(coarseAssign
+        .join(broadcast(fineGroups.select(col("g"), col("cell"), col("ce"))), "g")
+        .select(col("vec_id"), col("cell"),
+          Knn.dotFold(col("embedding"), col("ce")).as("fd")),
+      col("vec_id").as("b_id"), "cell", "fd")
+    probeTopK(emb, ranked.select(col("cell"), col("ce")),
+      Knn.dotFold(col("embedding"), col("ce")), fineAssign, nprobe, k)
   }
 
   /** Driver query: two-level anchor IVF, same nlist/nprobe curve as s3b. */
   def s3cKnnIvf2Level(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val emb = graft.Tables.embeddings(spark, dir)
-    val n = graft.Tables.cachedCount(spark, dir, "embeddings")
-    val nlist = math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
-    val nprobe = math.max(2, nlist / 4)
-    twoLevelAnchorTopK(emb, nlist, nprobe, k = 5).orderBy("a_id", "rk")
+    val nlist = nlistFor(graft.Tables.cachedCount(spark, dir, "embeddings"))
+    twoLevelAnchorTopK(emb, nlist, nprobeFor(nlist), k = 5).orderBy("a_id", "rk")
   }
 
   /** S5: exact per-label centroids — the distributed E-step every k-means /

@@ -269,50 +269,41 @@ object Pq {
   def ivfPqTopK(emb: DataFrame, nlist: Int, nprobe: Int, ksub: Int, k: Int,
                 rerank: Int, fitted: Array[Double] => Unit = _ => (),
                 iters: Int = lloydIters): DataFrame = {
-    val ak = graft.dedup.Dedup.md5Hash60(
-      concat(lit("ivfanchor|"), col("vec_id").cast("string")))
     // nlist ≈ √n rows, read by the fit, the assign, the code build and the
     // probe scorer — persisted so the corpus-wide TakeOrdered runs once
-    val anchors = graft.util.Caches.materialize(emb
-      .select(col("vec_id").as("cell"), col("embedding").as("ce"), ak.as("ak"))
-      .orderBy(col("ak"), col("cell")).limit(nlist)
-      .select("cell", "ce"))
+    val anchors = graft.util.Caches.materialize(
+      Ivf.anchorList(emb, "ivfanchor|", nlist).select("cell", "ce"))
     val cb = fitResidualCodebook(emb, anchors, ksub, iters)
     fitted(cb)
     // s3b's one-pass assignment argmax; the embedding rides the aggregate
-    // (first() — constant per vec_id) so the encode needs no second corpus
-    // join against the raw table
-    val assign = emb.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(anchors))
-      .select(col("vec_id"), col("embedding"), col("cell"),
-        Knn.dotFold(col("embedding"), col("ce")).as("adot"))
-      .groupBy(col("vec_id").as("b_id"))
-      .agg(max_by(col("cell"), struct(col("adot"), (-col("cell")).as("nc"))).as("cell"),
-        first(col("embedding")).as("embedding"))
+    // so the encode needs no second corpus join against the raw table
+    val assign = Ivf.argmax(emb.select(col("vec_id"), col("embedding"))
+        .crossJoin(broadcast(anchors))
+        .select(col("vec_id"), col("embedding"), col("cell"),
+          Knn.dotFold(col("embedding"), col("ce")).as("adot")),
+      col("vec_id").as("b_id"), "cell", "adot", "embedding")
     // the index: the ONE corpus-sized frame of the scan — cell + 8 B codes
     val codes = assign.join(broadcast(anchors), "cell")
       .select(col("b_id"), col("cell"),
         pq_encode_res(col("embedding"), col("ce"), cb, m, dsub).as("codes"))
-    val stratum = emb.join(broadcast(Knn.queryIds(emb)), "vec_id")
-      .select(col("vec_id"), col("embedding"))
-    // probe ranking keeps the anchor dot: it IS the ADC cell offset q·ce
-    val probes = stratum.crossJoin(broadcast(anchors))
-      .select(col("vec_id"), col("cell"),
-        Knn.dotFold(col("embedding"), col("ce")).as("adot"))
-      .withColumn("ark", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("adot").desc, col("cell").asc)))
-      .filter(col("ark") <= nprobe)
-      .select(col("vec_id").as("a_id"), col("cell"), col("adot").as("qcdot"))
-    searchCells(emb, codes, probes, stratum, cb, ksub, k, rerank)
+    searchCells(emb, codes, anchors, nprobe, cb, ksub, k, rerank)
   }
 
   /** The shared IVFADC SEARCH side (identical for flat and two-level
     * coarse assignment — the swap touches only how `codes` was built):
-    * per-query LUT → cell-pruned ADC scan with the q·ce offset → exact
-    * rerank. */
-  private def searchCells(emb: DataFrame, codes: DataFrame, probes: DataFrame,
-                          stratum: DataFrame, cb: Array[Double], ksub: Int,
+    * per-query probes of the nprobe best `cells` (cell, ce)
+    * ([[Ivf.probeRank]]) → per-query LUT → cell-pruned ADC scan with the
+    * q·ce offset → exact rerank. */
+  private def searchCells(emb: DataFrame, codes: DataFrame, cells: DataFrame,
+                          nprobe: Int, cb: Array[Double], ksub: Int,
                           k: Int, rerank: Int): DataFrame = {
+    val stratum = emb.join(broadcast(Knn.queryIds(emb)), "vec_id")
+      .select(col("vec_id"), col("embedding"))
+    // probe ranking keeps the anchor dot: it IS the ADC cell offset q·ce
+    val probes = Ivf.probeRank(stratum.crossJoin(broadcast(cells))
+        .select(col("vec_id"), col("cell"),
+          Knn.dotFold(col("embedding"), col("ce")).as("adot")), "adot", nprobe)
+      .select(col("vec_id").as("a_id"), col("cell"), col("adot").as("qcdot"))
     // MATERIALIZE the code index: same defect and fix as [[pqTopK]] — the
     // codes frame ends in a pq_encode_res projection on the exchange-free
     // stream side of the probes join, so codegen re-evaluated the residual
@@ -348,8 +339,8 @@ object Pq {
   def s9KnnIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.Tables.embeddings(spark, dir)
     val n = graft.Tables.cachedCount(spark, dir, "embeddings")
-    val nlist = math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
-    val nprobe = math.max(2, nlist / 4)
+    val nlist = Ivf.nlistFor(n)
+    val nprobe = Ivf.nprobeFor(nlist)
     val ksub = ksubFor(n)
     ivfPqTopK(emb, nlist, nprobe, ksub, s9K, s9Rerank,
         cb => register("s9_knn_ivfpq", s9OracleSql(cb, ksub)))
@@ -445,13 +436,11 @@ object Pq {
       .orderBy(col("wk"), col("vec_id")).limit(2048)
     // flat-optimal fine cell per sample vector (s9's rule: dot desc, ties
     // to the lower cell id)
-    val flatBest = sample
-      .crossJoin(broadcast(ranked.select(col("cell"), col("ce"))))
-      .select(col("vec_id"), col("embedding"), col("cell"),
-        Knn.dotFold(col("embedding"), col("ce")).as("fd"))
-      .groupBy("vec_id")
-      .agg(max_by(col("cell"), struct(col("fd"), (-col("cell")).as("nc"))).as("cell"),
-        first(col("embedding")).as("embedding"))
+    val flatBest = Ivf.argmax(sample
+        .crossJoin(broadcast(ranked.select(col("cell"), col("ce"))))
+        .select(col("vec_id"), col("embedding"), col("cell"),
+          Knn.dotFold(col("embedding"), col("ce")).as("fd")),
+      col("vec_id"), "cell", "fd", "embedding")
     // rank of that cell's coarse group within the vector's coarse ordering
     val ranks = flatBest
       .join(broadcast(fineGroups.select(col("cell"), col("g").as("gopt"))), "cell")
@@ -465,15 +454,15 @@ object Pq {
       .map(r => r.getInt(0) -> r.getLong(1)).toMap // ≤ ncoarse rows
   }
 
-  /** Two-level IVFADC top-k. The anchor list, the group split, and both
-    * argmax passes mirror `Ivf.twoLevelAnchorTopK` (same md5 family, same
-    * tie rules) with two differences: the coarse pass keeps the top `ma`
-    * groups (cd desc, ties to the lower g — the same ordering as the old
-    * argmax, so multiAssign = 1 reproduces round 14 exactly) rather than
-    * only the winner, and — round 16 — both ranking aggregates run over
-    * NARROW id/score rows, with the embedding and the winning anchor
-    * re-attached by plain joins afterward (the residual encode needs
-    * them). The top-k selection itself is a bounded sort-and-slice of the
+  /** Two-level IVFADC top-k. The anchors and the group split are
+    * [[Ivf.twoLevelAnchors]] and the fine pass is [[Ivf.argmax]], as in
+    * `Ivf.twoLevelAnchorTopK`, with two differences: the coarse pass keeps
+    * the top `ma` groups (cd desc, ties to the lower g — the same ordering
+    * as the old argmax, so multiAssign = 1 reproduces round 14 exactly)
+    * rather than only the winner, and — round 16 — both ranking
+    * aggregates run over NARROW id/score rows, with the embedding and the
+    * winning anchor re-attached by plain joins afterward (the residual
+    * encode needs them). The top-k selection itself is a bounded sort-and-slice of the
     * ncoarse dots per vector — one exchanged row per corpus vector, and
     * the aggregate's sort-based-fallback spill is proportional to 24 B
     * rows, never to the vectors (the r16 sf100 ENOSPC lesson). */
@@ -484,30 +473,10 @@ object Pq {
                         multiAssign: Int = 0): DataFrame = {
     // multiAssign = 0 (the default) routes the width off the measured
     // sample stats; an explicit value pins it (spec/diagnostic paths)
-    val ncoarse = math.max(2, math.ceil(math.sqrt(nlist.toDouble)).toInt)
-    val ak = graft.dedup.Dedup.md5Hash60(
-      concat(lit("ivfanchor|"), col("vec_id").cast("string")))
-    // nlist rows; persisted — read by the group split, the codebook fit,
-    // the code build and the probe scorer. The single-partition window is
-    // over nlist (≈ √n) rows, bounded at any corpus size.
-    val ranked = graft.util.Caches.materialize(emb
-      .select(col("vec_id").as("cell"), col("embedding").as("ce"), ak.as("ak"))
-      .orderBy(col("ak"), col("cell")).limit(nlist)
-      .withColumn("r", row_number().over(Window.orderBy(col("ak"), col("cell"))))
-      .select("cell", "ce", "r"))
-    val coarse = ranked.filter(col("r") <= ncoarse)
-      .select(col("cell").as("g"), col("ce").as("cg"))
-    // fine anchor -> coarse group: argmax dot, ties to the lower group id
-    val fineGroups = ranked.select(col("cell"), col("ce"))
-      .crossJoin(broadcast(coarse))
-      .select(col("cell"), col("ce"), col("g"),
-        Knn.dotFold(col("ce"), col("cg")).as("gd"))
-      .groupBy("cell")
-      .agg(max_by(col("g"), struct(col("gd"), (-col("g")).as("ng"))).as("g"),
-        first(col("ce")).as("ce"))
+    val (ranked, coarse, fineGroups) = Ivf.twoLevelAnchors(emb, nlist)
     val ma =
       if (multiAssign > 0) multiAssign
-      else measuredMultiAssign(emb, ranked, coarse, fineGroups, ncoarse)
+      else measuredMultiAssign(emb, ranked, coarse, fineGroups, Ivf.ncoarseFor(nlist))
     val cb = fitResidualCodebook2Level(emb, coarse, fineGroups, ksub, iters, ma)
     fitted(cb, ma)
     // corpus pass 1: top-ma coarse groups (n·ncoarse dots, unchanged) —
@@ -541,29 +510,19 @@ object Pq {
     // narrow-ranking discipline: the argmax aggregates (b_id, cell, fd)
     // rows only; the winner's anchor vector and the embedding re-attach
     // by one broadcast join + one vec-table join for the residual encode.
-    val fineBest = coarseAssign
-      .join(broadcast(fineGroups.select(col("g"), col("cell"), col("ce"))), "g")
-      .select(col("vec_id"), col("cell"),
-        Knn.dotFold(col("embedding"), col("ce")).as("fd"))
-      .groupBy(col("vec_id").as("b_id"))
-      .agg(max_by(col("cell"), struct(col("fd"), (-col("cell")).as("nc"))).as("cell"))
+    val fineBest = Ivf.argmax(coarseAssign
+        .join(broadcast(fineGroups.select(col("g"), col("cell"), col("ce"))), "g")
+        .select(col("vec_id"), col("cell"),
+          Knn.dotFold(col("embedding"), col("ce")).as("fd")),
+      col("vec_id").as("b_id"), "cell", "fd")
     val fineAssign = fineBest
       .join(broadcast(ranked.select(col("cell"), col("ce"))), "cell")
       .join(emb.select(col("vec_id").as("b_id"), col("embedding")), "b_id")
     val codes = fineAssign.select(col("b_id"), col("cell"),
       pq_encode_res(col("embedding"), col("ce"), cb, m, dsub).as("codes"))
-    val stratum = emb.join(broadcast(Knn.queryIds(emb)), "vec_id")
-      .select(col("vec_id"), col("embedding"))
-    // probe side: verbatim s9 — rank ALL fine anchors per query vector,
-    // keep the anchor dot (it IS the ADC cell offset q·ce)
-    val probes = stratum.crossJoin(broadcast(ranked.select(col("cell"), col("ce"))))
-      .select(col("vec_id"), col("cell"),
-        Knn.dotFold(col("embedding"), col("ce")).as("adot"))
-      .withColumn("ark", row_number().over(
-        Window.partitionBy("vec_id").orderBy(col("adot").desc, col("cell").asc)))
-      .filter(col("ark") <= nprobe)
-      .select(col("vec_id").as("a_id"), col("cell"), col("adot").as("qcdot"))
-    searchCells(emb, codes, probes, stratum, cb, ksub, k, rerank)
+    // search side: s9's — the probes rank ALL fine anchors per query vector
+    searchCells(emb, codes, ranked.select(col("cell"), col("ce")), nprobe,
+      cb, ksub, k, rerank)
   }
 
   /** The s9b residual training sample: like [[fitResidualCodebook]] but
@@ -607,8 +566,8 @@ object Pq {
   def s9bKnnIvfPq2Level(spark: SparkSession, dir: String): DataFrame = {
     val emb = graft.Tables.embeddings(spark, dir)
     val n = graft.Tables.cachedCount(spark, dir, "embeddings")
-    val nlist = math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
-    val nprobe = math.max(2, nlist / 4)
+    val nlist = Ivf.nlistFor(n)
+    val nprobe = Ivf.nprobeFor(nlist)
     val ksub = ksubFor(n)
     twoLevelIvfPqTopK(emb, nlist, nprobe, ksub, s9K, s9Rerank,
         (cb, ma) => register("s9b_knn_ivfpq_2level", s9bOracleSql(cb, ksub, ma)))

@@ -47,7 +47,6 @@ class BitmapSpec extends SparkSpec {
 
   test("SQL registration: bitmap_distinct usable from spark.sql") {
     import spark.implicits._
-    BitmapCatalyst.register(spark)
     Seq((1L, 10L), (1L, 10L), (2L, 11L)).toDF("g", "k")
       .createOrReplaceTempView("bm_in")
     val out = spark.sql(

@@ -37,7 +37,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("SQL registration works (spark.sql path)") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT money_parse('$12.50') AS m, version_cmp('1.3.0', '1.2.9') AS v, " +
         "dot_fold(array(CAST(2 AS BIGINT), 3), array(CAST(10 AS BIGINT), 100)) AS d")
@@ -167,8 +166,7 @@ class ExpressionsSpec extends SparkSpec {
       .select(KmvCatalyst.approx_distinct_kmv(col("ck")).as("est"))
       .collect().head.getDouble(0)
     assert(repart === catalyst)
-    // SQL registration path
-    KmvCatalyst.register(spark)
+    // SQL path (injected by GraftExtensions)
     ds.createOrReplaceTempView("kmv_in")
     val viaSql = spark.sql("SELECT approx_distinct_kmv(ck) FROM kmv_in")
       .collect().head.getDouble(0)
@@ -199,8 +197,7 @@ class ExpressionsSpec extends SparkSpec {
       }.min
       assert(est >= n, s"undercount for $w: $est < $n")
     }
-    // SQL registration path
-    CmsCatalyst.register(spark)
+    // SQL path (injected by GraftExtensions)
     words.createOrReplaceTempView("cms_in")
     val viaSql = spark.sql("SELECT cms_sketch(w) FROM cms_in")
       .collect().head.getSeq[Long](0)

@@ -35,7 +35,6 @@ class HllSpec extends SparkSpec {
   }
 
   test("sql surface registers and matches the Column api") {
-    HllCatalyst.register(spark)
     graft.Tables.lineitem(spark, sf0001).createOrReplaceTempView("li_hll")
     val viaSql = spark.sql(
       "SELECT approx_distinct_hll(l_orderkey) FROM li_hll").head().getDouble(0)

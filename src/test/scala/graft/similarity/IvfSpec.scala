@@ -10,37 +10,39 @@ class IvfSpec extends SparkSpec {
   // the engine's fixed-count query stratum, so recall comparisons against
   // bruteForceTopK (which picks the same stratum internally) line up
   lazy val queries = emb.join(Knn.queryIds(emb), "vec_id")
-  lazy val index = Ivf.build(emb, nlist = 8)
+  lazy val cents = Ivf.fitCentroids(emb, nlist = 8)
 
   test("index assigns every vector to exactly one of nlist cells") {
-    assert(index.assignments.count() === emb.count())
-    val cells = index.assignments.select("cell").distinct().as[Int].collect()
-    assert(cells.forall(c => c >= 0 && c < 8))
-    assert(index.centroids.length === 8)
-  }
-
-  test("probing all cells reproduces exact brute-force top-k") {
-    val full = Ivf.search(index, queries, k = 5, nprobe = 8)
-      .select("a_id", "rk", "b_id").as[(Long, Int, Long)].collect().toSet
-    val exact = Knn.bruteForceTopK(emb, 5)
-      .select("a_id", "rk", "b_id").as[(Long, Int, Long)].collect().toSet
-    assert(full === exact)
+    // the fit yields cells 0 until nlist; probing all of them with k = n - 1
+    // must return every other vector exactly once per query — a vector in
+    // no cell would be missing, one in two cells would appear twice
+    assert(cents.map(_._1).toSeq === (0 until 8))
+    val n = emb.count().toInt
+    val all = Ivf.centroidTopK(emb, cents, nprobe = 8, k = n - 1)
+      .select("a_id", "b_id").as[(Long, Long)].collect()
+    val byQuery = all.groupBy(_._1)
+    assert(byQuery.size === Knn.queryN)
+    byQuery.foreach { case (a, rows) =>
+      assert(rows.length === n - 1, s"query $a")
+      assert(rows.map(_._2).toSet.size === n - 1, s"query $a")
+      assert(!rows.exists(_._2 == a), s"query $a")
+    }
   }
 
   test("sampled quantizer fit keeps full-corpus assignment and recall floor") {
     // the 100 TB path: k-means sees only the hash-sample, assignment and
     // search still cover every vector
-    val sampled = Ivf.build(emb, nlist = 8, fitFrac = 0.5)
-    assert(sampled.assignments.count() === emb.count())
+    val sampled = Ivf.fitCentroids(emb, nlist = 8, fitFrac = 0.5)
+    assert(sampled.length === 8)
     val exact = Knn.bruteForceTopK(emb, 5)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    val approx = Ivf.search(sampled, queries, k = 5, nprobe = 8)
+    val approx = Ivf.centroidTopK(emb, sampled, nprobe = 8, k = 5)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    // all-cells probe over a sampled-fit index is still exhaustive search
+    // all-cells probe over a sampled-fit quantizer is still exhaustive search
     assert(approx === exact)
     // and the sample itself is deterministic: same frac -> same centroids
-    val again = Ivf.build(emb, nlist = 8, fitFrac = 0.5)
-    assert(sampled.centroids.map(_._2.toSeq).toSeq === again.centroids.map(_._2.toSeq).toSeq)
+    val again = Ivf.fitCentroids(emb, nlist = 8, fitFrac = 0.5)
+    assert(sampled.map(_._2.toSeq).toSeq === again.map(_._2.toSeq).toSeq)
   }
 
   test("anchor IVF: probing all cells reproduces exact brute-force top-k") {
@@ -71,18 +73,36 @@ class IvfSpec extends SparkSpec {
   test("nprobe trades recall for cost, stays above a sane floor") {
     val exact = Knn.bruteForceTopK(emb, 5)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    val approx = Ivf.search(index, queries, k = 5, nprobe = 3)
-      .select("a_id", "b_id").as[(Long, Long)].collect().toSet
+    val dots = Ivf.centroidTopK(emb, cents, nprobe = 3, k = 5).collect()
+    val approx = dots.map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))).toSet
     val recall = (exact & approx).size.toDouble / exact.size
     assert(approx.nonEmpty && recall >= 0.3, s"recall=$recall")
     // every reported dot is a true dot product
-    val dots = Ivf.search(index, queries, k = 5, nprobe = 3).collect()
     val truth = Knn.bruteForceTopK(emb, emb.count().toInt).collect()
       .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")) -> r.getAs[Double]("dot")).toMap
     dots.foreach { r =>
       val key = (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))
       truth.get(key).foreach(d => assert(math.abs(d - r.getAs[Double]("dot")) < 1e-12))
     }
+  }
+
+  test("shared argmax: exact score ties go to the lower cell, at any partitioning") {
+    // vector 1 has the SAME dot (1.0) with anchors 7 and 3, listed higher
+    // cell first; vector 2 has no tie (anchor 7 wins); the carried column
+    // rides along unchanged
+    val vecs = Seq((1L, Array(1.0f, 1.0f), "a"), (2L, Array(2.0f, 0.5f), "b"))
+      .toDF("vec_id", "embedding", "tag")
+    val anchors = Seq((7L, Array(1.0f, 0.0f)), (3L, Array(0.0f, 1.0f)), (5L, Array(-1.0f, 0.0f)))
+      .toDF("cell", "ce")
+    def assign(parts: Int) = Ivf.argmax(vecs.repartition(parts)
+        .crossJoin(broadcast(anchors))
+        .select(col("vec_id"), col("tag"), col("cell"),
+          Knn.dotFold(col("embedding"), col("ce")).as("s")),
+      col("vec_id"), "cell", "s", "tag")
+      .as[(Long, Long, String)].collect().sortBy(_._1).toSeq
+    val one = assign(1)
+    assert(one === Seq((1L, 3L, "a"), (2L, 7L, "b")))
+    assert(assign(13) === one)
   }
 
   test("two-level anchor IVF: all-cells probe reproduces exact brute-force top-k") {

@@ -53,7 +53,7 @@ def run_anchor(out, sf_dir, reps):
     with open(os.path.join(here, "anchors_sql.json")) as f:
         sqls = json.load(f)
     assert sorted(sqls) == sorted(ANCHORS), sorted(sqls)
-    # engine side: Bench's own min-over-retries on the anchor set
+    # engine side: one targeted Bench pass on the anchor set
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
     proc = subprocess.run(
         ["sbt", "-batch", f"runMain graft.Bench {','.join(ANCHORS)}"],
