@@ -8,9 +8,10 @@ import org.apache.spark.sql.types.DecimalType
 import graft.Tables
 import graft.operators.Aggregates.dec
 
-/** Join tier (SURVEY.md §2.3): exact broadcast enrichment (J1), two-phase
-  * exact→fuzzy enrichment (J1+J2+O3), group-scalar attach (J3/A3), band
-  * self-join (J4), and neighborhood-exists semi join (J5). */
+/** Join tier (SURVEY.md §2.3): exact broadcast enrichment (J1),
+  * exact→fuzzy enrichment in one ranked candidate pass (J1+J2+O3),
+  * group-scalar attach (J3/A3), band self-join (J4), and
+  * neighborhood-exists semi join (J5). */
 object Joins {
 
   /** J1 exact enrichment: fact × broadcast dimension equi-join, then
@@ -28,7 +29,7 @@ object Joins {
       .orderBy("p_brand")
   }
 
-  /** J1+J2+O3: the flagship two-phase vendor enrichment over a vendor string
+  /** J1+J2+O3: the flagship exact→fuzzy vendor enrichment over a vendor string
     * derived from orders (exact-match third, substring-match third,
     * no-match third). See [[Enrichment.twoPhase]]. */
   def j02TwoPhaseEnrich(spark: SparkSession, dir: String): DataFrame = {
@@ -47,11 +48,11 @@ object Joins {
       .orderBy("o_orderkey")
   }
 
-  /** J2b: the two-phase enrichment at DIRTY-DATA fidelity — messy vendor
+  /** J2b: the exact→fuzzy enrichment at DIRTY-DATA fidelity — messy vendor
     * strings (case mangling, `*`-suffixed transaction codes, punctuation,
     * stray whitespace: the "AMZN Mktp US*1X2Y3" reality) normalized on
     * BOTH sides by [[Enrichment.normalizeVendor]] before the same
-    * exact→fuzzy machinery. j02's plain `contains` finds none of these;
+    * exact→fuzzy ranking. j02's plain `contains` finds none of these;
     * after the fold, the exact third hits equality and the fuzzy third
     * hits substring containment, with the identical lowest-dimId
     * tie-break. */

@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   * Scale shape: this is a DIM-SIDE source by contract — the reference's
   * mapping table is user-curated and broadcast-size, so the file is read
   * once (driver-side), decoded into rows, and enters the plan as the
-  * broadcast side of the J1/J2 enrichment joins
+  * dimension of the enrichment's one ranked candidate pass
   * (`operators.Enrichment.twoPhase`). A fact-scale SQLite file would
   * instead ship page ranges to executors (`binaryFile` + per-partition
   * B-tree walks) — out of scope while every known producer of .db inputs

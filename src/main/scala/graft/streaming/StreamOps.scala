@@ -10,8 +10,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `(event_id, ts, user_id, event_type, value, props)` and returns a lazy
   * transform — the same code runs on `readStream` and on batch DataFrames.
   *
-  *  - tumbling/sliding windows + watermark: the month-folder landing
-  *    partitioning (email_fetcher.py:71-74) generalized;
+  *  - tumbling windows + watermark: the month-folder landing
+  *    partitioning (email_fetcher.py:71-74) generalized (the sliding
+  *    variant is `SetOpsWindows.slidingWindow`, query `stream_sliding`);
   *  - session windows: A1's gap-based clustering transposed to time
   *    (pdf_parser.py:259-281 ≈ `session_window(ts, gap)`);
   *  - watermarked dedup: the skip-if-exists download guard
@@ -31,13 +32,6 @@ object StreamOps {
       .agg(count(lit(1)).as("n"), sum("value").as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value"))
-
-  /** Sliding window variant (1h window, 15m slide). */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "30 minutes")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("user_id"), col("n"))
 
   /** Session windows: per-user sessions closed by a 10-minute gap — the
     * streaming twin of Aggregates.a01Sessionize (same gap, same semantics;

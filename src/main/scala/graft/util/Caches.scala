@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.storage.StorageLevel
 
 /** Materialization of operator-internal frames that several consumers
-  * share (the enrichment exact join, g2's edge list, sketch and shingle
+  * share (the enrichment's fact frame, g2's edge list, sketch and shingle
   * tables reused across self-join branches). A DataFrame DAG shares no
   * common subplans, so without this each consumer re-runs the derivation.
   *

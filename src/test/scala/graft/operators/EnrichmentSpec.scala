@@ -1,12 +1,12 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** Two-phase enrichment semantics (J1+J2+O3) vs a direct transcription of
-  * the reference loop (main.py:94-101 → database.py:83-126), plus q-gram
-  * path equivalence with the naive theta join. */
+/** Enrichment semantics (J1+J2+O3) vs a direct transcription of the
+  * reference loop (main.py:94-101 → database.py:83-126), plus q-gram
+  * candidate equivalence with the naive ranked theta join. */
 class EnrichmentSpec extends SparkSpec {
   import spark.implicits._
 
@@ -29,15 +29,18 @@ class EnrichmentSpec extends SparkSpec {
     (15L, "ab")                   // short (< Q): exercises short-key fallback; no match
   ).toDF("txn_id", "vendor")
 
-  /** The reference loop, verbatim semantics, driver-side. */
-  def referenceEnrich(): Map[Long, (Option[Long], String)] = {
-    val maps = mappings.orderBy("id")
-      .as[(Long, String, String, String, String, String, String)].collect()
-    txns.as[(Long, String)].collect().map { case (tid, vendor) =>
-      val exact = maps.find(_._2 == vendor)
-      val hit = exact.map((_, "exact")).orElse(
-        maps.find(m => m._2.toLowerCase.contains(vendor.toLowerCase)).map((_, "fuzzy")))
-      tid -> (hit.map(_._1._1), hit.map(_._2).getOrElse("none"))
+  /** The reference loop, verbatim semantics, driver-side: mapping `id`
+    * by fact id, plus the match type (a null key matches nothing). */
+  def referenceEnrich(maps: DataFrame = mappings,
+                      facts: DataFrame = txns): Map[Long, (Option[Long], String)] = {
+    val dims = maps.orderBy("id").select("id", "vendor").as[(Long, String)].collect()
+    facts.select("txn_id", "vendor").as[(Long, String)].collect().map {
+      case (tid, null) => tid -> (None, "none")
+      case (tid, vendor) =>
+        val exact = dims.find(_._2 == vendor)
+        val hit = exact.map((_, "exact")).orElse(
+          dims.find(m => m._2.toLowerCase.contains(vendor.toLowerCase)).map((_, "fuzzy")))
+        tid -> (hit.map(_._1._1), hit.map(_._2).getOrElse("none"))
     }.toMap
   }
 
@@ -157,7 +160,7 @@ class EnrichmentSpec extends SparkSpec {
   }
 
   test("q-gram fuzzyContains ≡ naive theta join on random-ish vendor sets") {
-    // misses drawn from customer names at sf0.001: substrings + garbage
+    // facts drawn from customer names at sf0.001: substrings + garbage
     val dim = graft.Tables.customer(spark, sf0001)
       .select(col("c_custkey").as("id"), col("c_name").as("vendor"),
         col("c_mktsegment").as("gl_account"))
@@ -168,18 +171,66 @@ class EnrichmentSpec extends SparkSpec {
           .when(col("o_orderkey") % 4 === 2, lit("mer#0"))  // len 5 ≥ Q, common substring
           .otherwise(lit("ab"))                             // short path
           .as("vendor"))
-    val fast = Enrichment.fuzzyContains(facts, dim, "txn_id", "vendor", "id", "vendor", Seq("gl_account"))
-      .select("txn_id", "gl_account").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    // naive: broadcast theta join + first-wins
+    def rows(df: DataFrame): Set[(Long, Option[String], String)] =
+      df.select("txn_id", "gl_account", "match_type").collect()
+        .map(r => (r.getLong(0), Option(r.getString(1)), r.getString(2))).toSet
+    val fast = rows(Enrichment.twoPhase(facts, dim, "txn_id", "vendor", "id", "vendor",
+      Seq("gl_account")))
+    // naive: broadcast theta join ranked (exact desc, id asc), then a left
+    // join so that facts without a candidate count as `none`
     val naive = {
       import org.apache.spark.sql.expressions.Window
       val d = broadcast(dim.toDF("d_id", "d_vendor", "d_gl"))
-      facts.join(d, contains(lower(col("d_vendor")), lower(col("vendor"))))
+      val exact = col("d_vendor") === col("vendor")
+      val best = facts.join(d, contains(lower(col("d_vendor")), lower(col("vendor"))))
         .withColumn("rn", row_number().over(
-          Window.partitionBy("txn_id").orderBy(col("d_id").asc)))
+          Window.partitionBy("txn_id").orderBy(exact.desc, col("d_id").asc)))
         .filter(col("rn") === 1)
-        .select("txn_id", "d_gl").collect().map(r => (r.getLong(0), r.getString(1))).toSet
+        .select(col("txn_id"), col("d_gl"),
+          when(exact, "exact").otherwise("fuzzy").as("mt"))
+      rows(facts.join(best, Seq("txn_id"), "left")
+        .select(col("txn_id"), col("d_gl").as("gl_account"),
+          coalesce(col("mt"), lit("none")).as("match_type")))
     }
+    assert(fast.size === 400)
     assert(fast === naive)
+  }
+
+  test("match rule edge cases: exact beats a lower id, case, duplicates, empty, null, non-ASCII") {
+    val dim = Seq(
+      (1L, "ACME CORP"),     // contains "ACME", but a higher id is exact
+      (2L, "ACME"),
+      (3L, "globex"),        // differs from id 4 only in case
+      (4L, "GLOBEX"),
+      (6L, "INITECH"),       // duplicated key: the lower id 5 wins
+      (5L, "INITECH"),
+      (7L, "CAFÉ ÉCLAIR")    // É folds to é in Java and in Spark alike
+    ).toDF("id", "vendor")
+      .withColumn("gl_account", concat(lit("gl"), col("id").cast("string")))
+    val facts = Seq[(Long, String)](
+      (10L, "ACME"),         // exact id 2, not fuzzy id 1
+      (11L, "GLOBEX"),       // exact id 4, not fuzzy id 3
+      (12L, "globex"),       // exact id 3
+      (13L, "INITECH"),      // exact id 5
+      (14L, ""),             // every key contains "": fuzzy id 1
+      (15L, null),           // none
+      (16L, "café éclair"),  // fuzzy id 7 through the case fold
+      (17L, "éCLAIR"),       // fuzzy id 7
+      (18L, "É")             // short key: fuzzy id 7
+    ).toDF("txn_id", "vendor")
+    val got = Enrichment.twoPhase(facts, dim, "txn_id", "vendor", "id", "vendor",
+        Seq("gl_account"))
+      .select("txn_id", "gl_account", "match_type")
+      .collect().map(r => r.getLong(0) -> (Option(r.getString(1)), r.getString(2))).toMap
+    val want = referenceEnrich(dim, facts).map { case (tid, (mid, mt)) =>
+      tid -> (mid.map(id => s"gl$id"), mt)
+    }
+    assert(want === Map(
+      10L -> (Some("gl2"), "exact"), 11L -> (Some("gl4"), "exact"),
+      12L -> (Some("gl3"), "exact"), 13L -> (Some("gl5"), "exact"),
+      14L -> (Some("gl1"), "fuzzy"), 15L -> (None, "none"),
+      16L -> (Some("gl7"), "fuzzy"), 17L -> (Some("gl7"), "fuzzy"),
+      18L -> (Some("gl7"), "fuzzy")))
+    assert(got === want)
   }
 }
